@@ -1,76 +1,62 @@
 package graft.operators
 
 import graft.model.Template
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-/** Structural/metric counters for one `transform` run. Counts are computed
-  * lazily (call `compute()`), batched into at most three small jobs — never
-  * one job per stage (see SURVEY §7.4.8). Shapes mirror the reference's
-  * metrics dict (reference: src/api/v1/engine.py:136-142).
+/** Structural/metric counters for one `transform` run, read from named
+  * `Dataset.observe` observations placed where the counts are taken: input
+  * rows, date and numeric parse failures before the F6 drop, rows before
+  * dedupe and output rows. Observations cost no job of their own; the action
+  * that runs the frame fills them. Shapes mirror the reference's metrics
+  * dict (reference: src/api/v1/engine.py:136-142).
   */
 final class TransformMetrics private[operators] (
     inputCols: Int,
     unpivotApplied: Boolean,
     nValueCols: Int,
     unpivotAfterCols: Int,
-    preDropFrame: Option[DataFrame], // frame carrying __parse-marker cols
-    preDedupeFrame: Option[DataFrame],
-    dedupeKeys: List[String],
-    inputFrame: DataFrame,
+    own: TransformEngine.Observed,
+    rebuild: () => (DataFrame, TransformEngine.Observed),
 ) {
 
-  /** Runs the batched metric jobs:
-    *  (1) one count() on the input (unpivot before/after shapes derived
-    *      arithmetically: melt multiplies rows by the value-column count);
-    *  (2) one agg on the pre-drop frame for date/numeric parse failures;
-    *  (3) one agg on the pre-dedupe frame for dedupe_dropped
-    *      (count - countDistinct(keys), valid for any keep-mode).
-    */
-  def compute(): Map[String, Any] = {
-    // The three metric jobs share the input's lineage; without caching each
-    // one re-executes the source read. Persist the input for the duration
-    // of compute() — job 1 materializes the cache, jobs 2 and 3 read it —
-    // then release it.
-    val cached = Seq(inputFrame) ++ preDropFrame ++ preDedupeFrame
-    cached.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try computeJobs()
-    finally cached.foreach(_.unpersist(blocking = false))
+  /** Exact metrics whatever ran on the returned frame before: an earlier
+    * action may have fed its observations too (a sort's sampling job runs
+    * the plan once more). So this rebuilds the transform with fresh
+    * observations and fills them with one `noop` write. */
+  def compute(): Map[String, Any] = measure()._1
+
+  /** [[compute]] plus the output row count. */
+  private[graft] def measure(): (Map[String, Any], Long) = {
+    val (df, fresh) = rebuild()
+    df.write.format("noop").mode("overwrite").save()
+    read(fresh)
   }
 
-  private def computeJobs(): Map[String, Any] = {
-    val rowsBefore = inputFrame.count()
+  /** The metrics and output row count filled by the returned frame's own
+    * action, which must be its first and only one. Blocks until that
+    * action's completion event arrives on the listener bus. */
+  private[graft] def observed(): (Map[String, Any], Long) = read(own)
+
+  private def read(o: TransformEngine.Observed): (Map[String, Any], Long) = {
+    // an observation comes back empty when the optimizer proved its input
+    // empty and removed it from the plan
+    def value(obs: Observation, name: String) =
+      obs.get.getOrElse(name, 0L).asInstanceOf[Long]
+    val rowsBefore = value(o.input, "rows")
     val rowsAfterUnpivot = if (unpivotApplied) rowsBefore * nValueCols else rowsBefore
-
-    val (dateFail, numFail) = preDropFrame match {
-      case Some(f) =>
-        val r = f.agg(
-          coalesce(sum(col("__date_fail").cast("long")), lit(0L)).as("d"),
-          coalesce(sum(col("__num_fail").cast("long")), lit(0L)).as("n"),
-        ).head()
-        (r.getLong(0), r.getLong(1))
-      case None => (0L, 0L)
-    }
-
-    val dedupeDropped = preDedupeFrame match {
-      case Some(f) if dedupeKeys.nonEmpty =>
-        val r = f.agg(
-          count(lit(1)).as("c"),
-          count_distinct(struct(dedupeKeys.map(col): _*)).as("d"),
-        ).head()
-        r.getLong(0) - r.getLong(1)
-      case _ => 0L
-    }
-
-    Map(
+    val rowsOut = value(o.output, "rows")
+    // every dedupe mode keeps one row per distinct key
+    val dedupeDropped = o.preDedupe.fold(0L)(value(_, "rows") - rowsOut)
+    (Map(
       "unpivot_before" -> (rowsBefore, inputCols),
       "unpivot_after" -> (rowsAfterUnpivot, if (unpivotApplied) unpivotAfterCols else inputCols),
       "dedupe_dropped" -> dedupeDropped,
-      "date_parse_failures" -> dateFail,
-      "numeric_parse_failures" -> numFail,
-    )
+      "date_parse_failures" -> value(o.parse, "date_fail"),
+      "numeric_parse_failures" -> value(o.parse, "num_fail"),
+    ), rowsOut)
   }
 }
 
@@ -135,9 +121,13 @@ object TransformEngine {
   /** F4/F5 drop columns whose non-null fraction is below `threshold`.
     * One aggregate of avg(isNotNull) over all columns, then a select —
     * never N per-column jobs (reference: src/api/v1/engine.py:168-176). */
-  def dropNullColumns(df: DataFrame, threshold: Double): DataFrame = {
+  def dropNullColumns(df: DataFrame, threshold: Double): DataFrame =
+    df.select(nullColumnsKept(df, threshold).map(c => col(quoted(c))).toIndexedSeq: _*)
+
+  /** The columns F4 keeps; all of them when none passes the threshold. */
+  private def nullColumnsKept(df: DataFrame, threshold: Double): Array[String] = {
     val cols = df.columns
-    if (cols.isEmpty) return df
+    if (cols.isEmpty) return cols
     val fracs = df.agg(
       avg(col(quoted(cols.head)).isNotNull.cast("double")).as(cols.head),
       cols.tail.toIndexedSeq.map(c => avg(col(quoted(c)).isNotNull.cast("double")).as(c)): _*
@@ -145,7 +135,7 @@ object TransformEngine {
     val keep = cols.zipWithIndex.collect {
       case (c, i) if !fracs.isNullAt(i) && fracs.getDouble(i) >= threshold => c
     }
-    if (keep.isEmpty) df else df.select(keep.toIndexedSeq.map(c => col(quoted(c))): _*)
+    if (keep.isEmpty) cols else keep
   }
 
   /** C5 trim all string columns (reference: src/api/v1/engine.py:178-180). */
@@ -262,90 +252,113 @@ object TransformEngine {
     }
   }
 
+  /** The named observations of one built transform. */
+  private[operators] final case class Observed(input: Observation, parse: Observation,
+      preDedupe: Option[Observation], output: Observation)
+
+  // names carry a sequence number: two transforms may meet in one plan
+  private val observedSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  private val rows = count(lit(1)).as("rows")
+
   /** Full `transform_data` pipeline (reference: src/api/v1/engine.py:134-232).
-    * Returns the transformed frame plus lazily-computable metrics.
+    * Returns the transformed frame plus its metrics, observed in the frame's
+    * plan (see [[TransformMetrics]]).
     *
     * @param dedupeOrder optional explicit "source order" columns for D1 parity
     *                    mode; None ⇒ fast `dropDuplicates`.
     */
   def transform(df: DataFrame, t: Template,
       dedupeOrder: Option[Seq[Column]] = None): (DataFrame, TransformMetrics) = {
-    val inputCols = df.columns.length
-
     // R1 unpivot: id vars = mapped canonical names present in the frame.
     val idVars = t.columnMappings.values.toList.distinct.filter(df.columns.contains)
     val doUnpivot = t.unpivot && idVars.nonEmpty
     val valueCols = df.columns.filterNot(idVars.contains)
-    var out =
-      if (doUnpivot)
-        df.unpivot(
-          idVars.map(c => col(quoted(c))).toArray,
-          valueCols.map(c => col(quoted(c))).toArray,
-          t.varName, t.valueName)
-      else df
 
-    // P3 provider_id literal.
-    out = out.withColumn("provider_id",
-      t.providerName.orElse(t.sourceFile) match {
-        case Some(v) => lit(v)
-        case None => lit(null).cast(StringType)
-      })
+    // R1 → P3 → F3, the stages before F4.
+    def front(in: DataFrame): DataFrame = {
+      var out =
+        if (doUnpivot)
+          in.unpivot(
+            idVars.map(c => col(quoted(c))).toArray,
+            valueCols.map(c => col(quoted(c))).toArray,
+            t.varName, t.valueName)
+        else in
 
-    // F3 drop all-null rows.
-    if (t.dropEmptyRows) out = dropEmptyRows(out)
+      // P3 provider_id literal.
+      out = out.withColumn("provider_id",
+        t.providerName.orElse(t.sourceFile) match {
+          case Some(v) => lit(v)
+          case None => lit(null).cast(StringType)
+        })
 
-    // F4 drop columns under the non-null threshold (one agg job).
-    t.dropNullColumnsThreshold.foreach(th => out = dropNullColumns(out, th))
-
-    // C5 / C6 string cleaning.
-    if (t.trimStrings) out = trimStrings(out)
-    if (t.stripThousands) out = stripThousands(out)
-
-    // C1 + F6: report_date coercion with parse-failure marker, then drop.
-    val hasDate = out.columns.contains("report_date")
-    if (hasDate) {
-      val dt = out.schema("report_date").dataType
-      out = out
-        .withColumn("__date_fail",
-          col("report_date").isNotNull && coerceDate(col("report_date"), dt).isNull)
-        .withColumn("report_date", coerceDate(col("report_date"), dt))
-    } else out = out.withColumn("__date_fail", lit(false))
-
-    // C3: sales_amount coercion with failure marker; nulls → 0.0.
-    val hasAmount = out.columns.contains("sales_amount")
-    if (hasAmount) {
-      val parsed = coerceFloat(col("sales_amount"), out.schema("sales_amount").dataType)
-      out = out
-        .withColumn("__num_fail", col("sales_amount").isNotNull && parsed.isNull)
-        .withColumn("sales_amount", coalesce(parsed, lit(0.0)))
-    } else out = out.withColumn("__num_fail", lit(false))
-
-    val preDrop = out // carries __date_fail / __num_fail for the metrics agg
-    out = out.drop("__date_fail", "__num_fail")
-    if (hasDate) out = out.filter(col("report_date").isNotNull)
-
-    // A1 combine_on group-sum.
-    if (t.combineOn.nonEmpty) {
-      val extra = (if (doUnpivot) List(t.varName) else Nil) ++ List("provider_id")
-      out = combineOn(out, t.combineOn, extra)
+      // F3 drop all-null rows.
+      if (t.dropEmptyRows) dropEmptyRows(out) else out
     }
 
-    // D1 keyed dedupe.
-    val preDedupe = out
-    val dedupeKeys = t.dedupeOn.filter(out.columns.contains)
-    if (dedupeKeys.nonEmpty) out = dedupe(out, dedupeKeys, dedupeOrder)
+    // F4 surviving columns depend on data: one aggregate job, run here on
+    // the unobserved frame and shared by every build below.
+    val kept = t.dropNullColumnsThreshold.map(th => nullColumnsKept(front(df), th))
 
-    val metrics = new TransformMetrics(
-      inputCols = inputCols,
+    def build(): (DataFrame, Observed) = {
+      val id = observedSeq.incrementAndGet()
+      def observation(what: String) = Observation(s"transform_${what}_$id")
+      val input = observation("input")
+      val parse = observation("parse")
+      val output = observation("output")
+      var out = front(df.observe(input, rows))
+
+      kept.foreach(k => out = out.select(k.map(c => col(quoted(c))).toIndexedSeq: _*))
+
+      // C5 / C6 string cleaning.
+      if (t.trimStrings) out = trimStrings(out)
+      if (t.stripThousands) out = stripThousands(out)
+
+      // C1 + F6: report_date coercion with parse-failure marker, then drop.
+      val hasDate = out.columns.contains("report_date")
+      if (hasDate) {
+        val dt = out.schema("report_date").dataType
+        out = out
+          .withColumn("__date_fail",
+            col("report_date").isNotNull && coerceDate(col("report_date"), dt).isNull)
+          .withColumn("report_date", coerceDate(col("report_date"), dt))
+      } else out = out.withColumn("__date_fail", lit(false))
+
+      // C3: sales_amount coercion with failure marker; nulls → 0.0.
+      if (out.columns.contains("sales_amount")) {
+        val parsed = coerceFloat(col("sales_amount"), out.schema("sales_amount").dataType)
+        out = out
+          .withColumn("__num_fail", col("sales_amount").isNotNull && parsed.isNull)
+          .withColumn("sales_amount", coalesce(parsed, lit(0.0)))
+      } else out = out.withColumn("__num_fail", lit(false))
+
+      out = out.observe(parse,
+        coalesce(sum(col("__date_fail").cast("long")), lit(0L)).as("date_fail"),
+        coalesce(sum(col("__num_fail").cast("long")), lit(0L)).as("num_fail"))
+      out = out.drop("__date_fail", "__num_fail")
+      if (hasDate) out = out.filter(col("report_date").isNotNull)
+
+      // A1 combine_on group-sum.
+      if (t.combineOn.nonEmpty) {
+        val extra = (if (doUnpivot) List(t.varName) else Nil) ++ List("provider_id")
+        out = combineOn(out, t.combineOn, extra)
+      }
+
+      // D1 keyed dedupe.
+      val dedupeKeys = t.dedupeOn.filter(out.columns.contains)
+      val preDedupe = if (dedupeKeys.isEmpty) None else Some(observation("pre_dedupe"))
+      preDedupe.foreach(pre => out = dedupe(out.observe(pre, rows), dedupeKeys, dedupeOrder))
+      (out.observe(output, rows), Observed(input, parse, preDedupe, output))
+    }
+
+    val (out, own) = build()
+    (out, new TransformMetrics(
+      inputCols = df.columns.length,
       unpivotApplied = doUnpivot,
       nValueCols = valueCols.length,
       unpivotAfterCols = idVars.length + 2,
-      preDropFrame = if (hasDate || hasAmount) Some(preDrop) else None,
-      preDedupeFrame = if (dedupeKeys.nonEmpty) Some(preDedupe) else None,
-      dedupeKeys = dedupeKeys,
-      inputFrame = df,
-    )
-    (out, metrics)
+      own = own,
+      rebuild = () => build()))
   }
 
   private def quoted(name: String): String = s"`${name.replace("`", "``")}`"

@@ -1,7 +1,15 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import graft.model.Template
 import graft.operators.{Combiner, TransformEngine}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,11 +23,12 @@ import scala.jdk.CollectionConverters._
   *   `header_row`/`skiprows`/`usecols`, S3 merged-header normalization,
   *   all-null row/col drops, P1 projection, and multi-sheet concat with
   *   `source_sheet` lineage (reference: src/templates.py:515-588).
-  * - S2 CSV scan: DISTRIBUTED. Plain `spark.read.csv` when `header_row`/
-  *   `skiprows` are trivial (the 100 TB fast path — header line handled by
-  *   the scan itself, filters/pruning push down); otherwise a
-  *   zipWithIndex row filter replays pandas' skiprows-then-header semantics
-  *   (reference: src/templates.py:521-529).
+  * - S2 CSV scan: DISTRIBUTED, with the header read on the driver from the
+  *   file's first records, so the scan needs no inference job. When
+  *   `header_row`/`skiprows` are trivial the scan drops the header line
+  *   itself (the 100 TB fast path — filters/pruning push down); otherwise a
+  *   row-id filter over the first split replays pandas' skiprows-then-header
+  *   semantics (reference: src/templates.py:521-529).
   * - S5 cached preview / S9 upload bytes are thin wrappers.
   */
 object TemplateReader {
@@ -168,47 +177,93 @@ object TemplateReader {
 
   // ------------------------------------------------------------------ csv
 
-  /** S2: template CSV scan. */
+  /** S2: template CSV scan. The header is read on the driver, from the
+    * file's first records, with the scan's own line reader and parser
+    * settings; the scan then runs on an explicit all-string schema, so
+    * reading launches no Spark job (no schema inference, no header collect).
+    * Parsing stays distributed and the scan still prunes columns. */
   def readCsv(spark: SparkSession, path: Path, t: Template): DataFrame = {
-    val base = spark.read
-      .option("sep", t.delimiter)
-      .option("encoding", t.encoding)
-      .option("nullValue", "")
+    val opts = Map("sep" -> t.delimiter, "encoding" -> t.encoding, "nullValue" -> "")
+    // header = true only lets makeSafeHeader name columns; the parser
+    // settings do not depend on it
+    val csv = new CSVOptions(opts + ("header" -> "true"), true,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    def scan(header: Boolean, names: Seq[String]) = spark.read.options(opts)
+      .option("header", header)
+      .schema(StructType(names.map(StructField(_, StringType))))
+      .csv(path.toString)
     val df =
       if (t.headerRow == 0 && t.skiprows.isEmpty) {
-        // Fast path: fully distributed, header handled by the scan.
-        base.option("header", "true").csv(path.toString)
+        // Fast path: the scan drops the header line itself; the names are
+        // the ones Spark's own header inference gives.
+        headRecords(spark, path, csv, 1).headOption match {
+          case Some(header) => scan(header = true, CSVUtils.makeSafeHeader(header,
+            spark.sessionState.conf.caseSensitiveAnalysis, csv).toSeq)
+          case None => spark.emptyDataFrame
+        }
       } else {
-        // pandas: drop `skiprows` raw rows first, then row `header_row` of the
-        // remainder is the header. zipWithIndex gives exact raw row numbers
-        // (one extra count job) while keeping parsing distributed.
-        val raw = base.option("header", "false").csv(path.toString)
-        val skips = t.skiprows.toSet
-        val headerRaw = {
-          // raw index of the header line after skiprows removal
-          var remaining = t.headerRow
-          var idx = 0
-          while (skips.contains(idx) || remaining > 0) {
-            if (!skips.contains(idx)) remaining -= 1
-            idx += 1
+        // pandas: drop `skiprows` raw records first, then record `header_row`
+        // of the remainder is the header (reference: src/templates.py:521-529).
+        val headerRaw = Iterator.from(0).filterNot(t.skiprows.contains)
+          .drop(t.headerRow).next()
+        val drops = (0 to headerRaw).toSet ++ t.skiprows
+        val records = headRecords(spark, path, csv, drops.max + 1)
+        if (records.isEmpty) spark.emptyDataFrame
+        else {
+          // the scan is as wide as the first record, like an inferred one
+          val width = records.head.length
+          val positional = (0 until width).map(i => s"_c$i")
+          val names = records.lift(headerRaw).fold(positional) { h =>
+            h.toIndexedSeq.padTo(width, null).take(width).zipWithIndex.map {
+              case (null | "", i) => s"Unnamed: $i"
+              case (n, _) => n
+            }
           }
-          idx
+          // Row ids below 2^33 exist only in the scan's first partition,
+          // which starts with the split headRecords read; there a row id is
+          // the raw record number, so the filter drops exactly `drops`.
+          scan(header = false, positional)
+            .filter(!monotonically_increasing_id().isin(drops.toSeq.map(_.toLong): _*))
+            .toDF(names: _*)
         }
-        val schema = raw.schema
-        val indexed = raw.rdd.zipWithIndex()
-        val headerNames = indexed.filter(_._2 == headerRaw).map(_._1).collect() match {
-          case Array(row) => row.toSeq.map(v => if (v == null) "" else v.toString)
-          case _ => schema.fieldNames.toSeq
-        }
-        val dataRdd = indexed
-          .filter { case (_, i) => i > headerRaw && !skips.contains(i.toInt) }
-          .map(_._1)
-        val named = spark.createDataFrame(dataRdd, schema)
-        named.toDF(headerNames.zipWithIndex.map {
-          case ("", i) => s"Unnamed: $i"
-          case (n, _) => n
-        }: _*)
       }
     TransformEngine.filterAndRename(df, t)
+  }
+
+  /** The first `n` non-blank records of a CSV input, split into lines,
+    * decoded and tokenized exactly as the CSV scan does it. They come from
+    * the data file the scan's first partition starts with (the largest one
+    * of a directory), and only from the bytes the scan's first split always
+    * covers (the whole file when it is small or compressed); fails when
+    * fewer than `n` records lie there and the input goes on past them. */
+  private def headRecords(spark: SparkSession, path: Path, csv: CSVOptions,
+      n: Int): Seq[Array[String]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new HPath(path.toUri)
+    val fs = root.getFileSystem(conf)
+    val status = fs.getFileStatus(root)
+    val files =
+      if (!status.isDirectory) Array(status)
+      else fs.listStatus(root).filter(f => f.isFile && !f.getPath.getName.matches("[_.].*"))
+        .sortBy(f => (-f.getLen, f.getPath.toString))
+    if (files.isEmpty) return Nil
+    val file = files.head
+    val sql = spark.sessionState.conf
+    val covered =
+      if (new CompressionCodecFactory(conf).getCodec(file.getPath) != null) file.getLen
+      else math.min(file.getLen, math.min(sql.filesMaxPartitionBytes, sql.filesOpenCostInBytes))
+    val lines = new HadoopFileLinesReader(
+      PartitionedFile(InternalRow.empty, SparkPath.fromPath(file.getPath), 0, covered),
+      csv.lineSeparatorInRead, conf)
+    val parser = new CsvParser(csv.asParserSettings)
+    val records =
+      try CSVUtils.filterCommentAndEmpty(
+          lines.map(l => new String(l.getBytes, 0, l.getLength, csv.charset)), csv)
+        .take(n).map(parser.parseLine).toVector
+      finally lines.close()
+    if (records.length < n && (covered < file.getLen || files.length > 1))
+      throw new UnsupportedOperationException(
+        s"$path: header_row/skiprows reach past the first split of ${file.getPath}")
+    records
   }
 }

@@ -392,6 +392,40 @@ class EventStreamSpec extends SparkSpec {
     assert(messages(e).exists(_.contains("maxKeys")), messages(e).mkString("; "))
   }
 
+  test("sentinel-flushed replays restore the no-data-batch conf; x106 keeps its final sessions") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val events = Seq(
+      (1L, ts(0), 10L, "click", 1.0), (2L, ts(5), 10L, "purchase", 2.0),
+      (3L, ts(50), 10L, "click", 3.0), (4L, ts(7), 11L, "click", 4.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val replays: Seq[(String, () => Any)] = Seq(
+      "dedupSessionWindowsReplay" -> (() =>
+        EventStream.dedupSessionWindowsReplay(spark, events, batches = 2)),
+      "sessionizeTimeoutReplay" -> (() =>
+        EventStream.sessionizeTimeoutReplay(spark, events, batches = 2)),
+      "dedupeReplay" -> (() =>
+        EventStream.dedupeReplay(spark, events, Seq("event_id"), batches = 2)),
+      "attributionReplay" -> (() =>
+        EventStream.attributionReplay(spark, events, batches = 2)))
+    // the caller's setting comes back, whether it was the default or set
+    replays.zipWithIndex.foreach { case ((name, run), i) =>
+      if (i % 2 == 0) spark.conf.unset(key) else spark.conf.set(key, "true")
+      val before = spark.conf.get(key)
+      run()
+      assert(spark.conf.get(key) == before, s"$name left $key changed")
+    }
+    spark.conf.unset(key)
+    // x106's replay keeps no-data batches: every user's last session,
+    // which only the final watermark advance closes, is still emitted
+    val replayed = EventStream.sessionWindowsReplay(spark, events, batches = 2)
+      .orderBy("user_id", "session_start").collect().toSeq
+    val batch = EventStream.sessionWindows(events)
+      .orderBy("user_id", "session_start").collect().toSeq
+    assert(replayed.length == 3)
+    assert(replayed == batch)
+    assert(replayed.last.getAs[Long]("user_id") == 11L)
+  }
+
   test("every replay helper refuses inputs past its maxRows driver bound") {
     import spark.implicits._
     val events = (1 to 10).map { i =>

@@ -5,6 +5,7 @@ import graft.operators.{Contract, Exporter}
 import graft.plans.Pipeline
 import graft.sources.XlsxMini
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Exporter sinks (K1-K8), contract validation (V1), and pipeline control
   * flow (V3) — reference: src/exporter.py, src/pipeline.py:61-184,
@@ -207,5 +208,102 @@ class ExporterPipelineSpec extends SparkSpec {
       failOnMissing = true)
     assert(!r.success)
     assert(Files.exists(dir.resolve("quarantine").resolve("in.csv")))
+  }
+
+  private val acme = Template(sourceType = "csv", providerName = Some("acme"))
+  private val goodCsv =
+    "article_sku,report_date,sales_amount\ns1,2021-01-02,10.5\ns2,2021-01-03,2\n"
+  private val badCsv =
+    "article_sku,report_date,sales_amount\ns1,NOT_A_DATE,10.5\ns2,ALSO_BAD,2\ns3,2021-01-03,4\n"
+  private def staging(dir: java.nio.file.Path) = {
+    val names = Files.list(dir)
+    try names.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("_staging")).toList
+    finally names.close()
+  }
+
+  test("runPipeline: a quarantined run leaves no staging and an existing output untouched") {
+    val dir = tmp
+    val out = dir.resolve("out.parquet")
+    Seq(("old", 1.0)).toDF("article_sku", "sales_amount").write.parquet(out.toString)
+    val src = dir.resolve("in.csv")
+    Files.writeString(src, badCsv)
+    val r = Pipeline.runPipeline(spark, src, acme, out,
+      dir.resolve("archive"), dir.resolve("quarantine"))
+    assert(!r.success && r.message.contains("Quarantine threshold"), r.message)
+    assert(r.rowCount == 1L)
+    assert(staging(dir).isEmpty)
+    assert(spark.read.parquet(out.toString).as[(String, Double)].collect().toSeq ==
+      Seq(("old", 1.0)))
+    assert(!Files.exists(dir.resolve("out.parquet.validation.txt")))
+  }
+
+  test("runPipeline: a success replaces an existing output and reports rows_out") {
+    val dir = tmp
+    val out = dir.resolve("out.parquet")
+    Seq(("old", 1.0)).toDF("article_sku", "sales_amount").write.parquet(out.toString)
+    val src = dir.resolve("in.csv")
+    Files.writeString(src, goodCsv)
+    val r = Pipeline.runPipeline(spark, src, acme, out,
+      dir.resolve("archive"), dir.resolve("quarantine"))
+    assert(r.success, r.message)
+    assert(r.rowCount == 2L && r.outputPath.contains(out.toString))
+    assert(staging(dir).isEmpty)
+    assert(spark.read.parquet(out.toString).select("article_sku").as[String]
+      .collect().sorted.toSeq == Seq("s1", "s2"))
+    val report = Files.readString(dir.resolve("out.parquet.validation.txt"))
+    assert(report.linesIterator.toSeq == Seq(
+      "date_parse_failures: 0", "dedupe_dropped: 0", "extra_vs_template: ",
+      "missing_vs_template: ", "numeric_parse_failures: 0", "rows_out: 2",
+      "unpivot_after: (2,3)", "unpivot_before: (2,3)"))
+  }
+
+  test("runPipeline: an exception during the write cleans up the staged output") {
+    val dir = tmp
+    val src = dir.resolve("in.csv")
+    Files.writeString(src, goodCsv)
+    // no lzo codec ships with Spark: every write task fails after the job
+    // has created the staged directory
+    val key = "spark.sql.parquet.compression.codec"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "lzo")
+    val r = try Pipeline.runPipeline(spark, src, acme, dir.resolve("out.parquet"),
+        dir.resolve("archive"), dir.resolve("quarantine"))
+      finally spark.conf.set(key, prev)
+    assert(!r.success)
+    assert(staging(dir).isEmpty)
+    assert(!Files.exists(dir.resolve("out.parquet")))
+    assert(Files.exists(dir.resolve("quarantine").resolve("in.csv")))
+    assert(r.metrics("unpivot_before") == ((2L, 3)))
+  }
+
+  test("runPipeline: an .xlsx output keeps its suffix through staging") {
+    val dir = tmp
+    val src = dir.resolve("in.csv")
+    Files.writeString(src, goodCsv)
+    val out = dir.resolve("out.xlsx")
+    val r = Pipeline.runPipeline(spark, src, acme, out,
+      dir.resolve("archive"), dir.resolve("quarantine"))
+    assert(r.success, r.message)
+    assert(r.rowCount == 2L && r.outputPath.contains(out.toString))
+    assert(staging(dir).isEmpty && !Files.exists(dir.resolve("out.xlsx.xlsx")))
+    assert(XlsxMini.readSheet(out, Some(Right("data"))).get.grid.length == 3)
+    assert(Files.readString(dir.resolve("out.xlsx.validation.txt"))
+      .contains("date_parse_failures: 0"))
+  }
+
+  test("runPipeline: a contract-level validation failure still reports its metrics") {
+    val dir = tmp
+    val src = dir.resolve("in.csv")
+    Files.writeString(src, badCsv)
+    val r = Pipeline.runPipeline(spark, src,
+      Template(sourceType = "csv", requiredFields = List("customer_id")),
+      dir.resolve("out.parquet"), dir.resolve("archive"), dir.resolve("quarantine"),
+      validationLevel = "contract")
+    assert(!r.success && r.message == "Validation failed.")
+    assert(r.metrics("validation_errors") == Seq("customer_id" -> "missing required column"))
+    assert(r.metrics("unpivot_before") == ((3L, 3)))
+    assert(r.metrics("date_parse_failures") == 2L)
+    assert(staging(dir).isEmpty && !Files.exists(dir.resolve("out.parquet")))
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import graft.model.Template
 import graft.operators.TransformEngine
+import graft.plans.Pipeline
+import graft.sources.TemplateReader
 import org.apache.spark.sql.functions._
 
 /** Mirrors the reference's engine tests (tests/test_engine_api.py:8-64,
@@ -96,38 +98,79 @@ class TransformEngineSpec extends SparkSpec {
     assert(metrics("numeric_parse_failures") == 1L)
   }
 
-  test("metrics jobs read the persisted input, then release it") {
-    val dir = java.nio.file.Files.createTempDirectory("metrics_cache")
-    Seq(("2021-01-02", "10.5", "a"), ("2021-01-05", "2", "a"), ("bad", "junk", "b"))
-      .toDF("report_date", "sales_amount", "k")
-      .write.mode("overwrite").parquet(dir.toString)
-    val df = spark.read.parquet(dir.toString)
-    val (_, m) = TransformEngine.transform(df,
-      Template(providerName = Some("p"), dedupeOn = List("k")))
-
-    val plans = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+  test("metrics are exact after earlier actions on the frame") {
+    val amounts = Seq(
+      ("s1", "10", "1,000", "x"), ("s2", "n/a", "5", "7"), ("s3", null, "2.5", null))
+      .toDF("article_sku", "2021-01-31", "2021-02-28", "Total")
+    val facts = Seq(
+      ("2021-01-02", "1", "a", 1), ("2021-01-03", "2", "a", 2), ("2021-01-04", "zz", "b", 3),
+      ("bad", "4", "b", 4), ("2021-01-05", "5", "c", 5))
+      .toDF("report_date", "sales_amount", "k", "ord")
+    val sparse = Seq[(String, String, String, String)](
+      ("2021-01-02", "1", "x", null), ("2021-01-03", "2", null, null),
+      ("2021-01-04", "3", "y", null))
+      .toDF("report_date", "sales_amount", "half", "empty")
+    val blanks = Seq[(String, String)]((null, null), ("2021-01-02", "1"), (null, null))
+      .toDF("report_date", "sales_amount")
+    // (name, input, template, dedupe order, expected metrics, rows out)
+    val cases = Seq(
+      ("unpivot", amounts, Template(columnMappings = Map("article_sku" -> "article_sku"),
+        unpivot = true, varName = "report_date", valueName = "sales_amount",
+        trimStrings = true, stripThousands = true, providerName = Some("p")), None,
+        ((3L, 4), (9L, 3), 0L, 3L, 2L), 6L),
+      ("combine_on", facts.drop("ord"), Template(combineOn = List("k"),
+        providerName = Some("p")), None,
+        ((5L, 3), (5L, 3), 0L, 1L, 1L), 3L),
+      ("dedupe_on keep-first", facts, Template(dedupeOn = List("k"),
+        providerName = Some("p")), Some(Seq(col("ord"))),
+        ((5L, 4), (5L, 4), 1L, 1L, 1L), 3L),
+      ("drop_null_columns_threshold", sparse, Template(dropNullColumnsThreshold = Some(0.5),
+        providerName = Some("p")), None,
+        ((3L, 4), (3L, 4), 0L, 0L, 0L), 3L),
+      ("drop_empty_rows", blanks, Template(dropEmptyRows = true), None,
+        ((3L, 2), (3L, 2), 0L, 0L, 0L), 1L))
+    cases.foreach { case (name, df, t, order, (before, after, dropped, dateFail, numFail), rows) =>
+      val (out, m) = TransformEngine.transform(df, t, order)
+      // a sort's sampling job and a limit run the plan before compute()
+      out.orderBy(out.columns.head).collect()
+      out.limit(1).collect()
+      assert(m.measure() == ((Map(
+        "unpivot_before" -> before, "unpivot_after" -> after,
+        "dedupe_dropped" -> dropped, "date_parse_failures" -> dateFail,
+        "numeric_parse_failures" -> numFail), rows)), name)
     }
-    spark.listenerManager.register(listener)
-    try {
-      val metrics = m.compute()
-      assert(metrics("dedupe_dropped") == 1L)
-      org.apache.spark.GraftTestBus.flush(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      val captured = plans.asScala.toList
-      assert(captured.size >= 3, s"expected 3 metric jobs, saw ${captured.size}")
-      // every metric job reads the cached input, not the parquet source
-      captured.foreach(p => assert(p.contains("InMemoryTableScan"),
-        s"metric job bypassed the cache:\n$p"))
-    } finally spark.listenerManager.unregister(listener)
-    // cache released after compute()
-    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("job budget: one job per pipeline file and per compute(), no cache left") {
+    val dir = java.nio.file.Files.createTempDirectory("job_budget")
+    def sheet(name: String, text: String) =
+      java.nio.file.Files.writeString(dir.resolve(name), text)
+    val rows = "s1,2021-01-02,10.5\ns2,2021-01-03,2\ns3,2021-01-04,4\n"
+    val header = "article_sku,report_date,sales_amount\n"
+    // (file, template, archived, rows out)
+    val files = Seq(
+      (sheet("plain.csv", header + rows), Template(sourceType = "csv"), true, 3L),
+      (sheet("titled.csv", "Report,,\nprinted today,,\nregion x,,\n" + header + rows),
+        Template(sourceType = "csv", headerRow = 2, skiprows = List(1)), true, 3L),
+      (sheet("quarantined.csv", header + "s1,NOT_A_DATE,1\ns2,ALSO_BAD,2\ns3,2021-01-04,4\n"),
+        Template(sourceType = "csv"), false, 1L))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    files.foreach { case (f, t, archived, rowsOut) =>
+      val (r, jobs) = SparkSpec.jobsOf(spark) {
+        Pipeline.runPipeline(spark, f, t, dir.resolve(s"${f.getFileName}.parquet"),
+          dir.resolve("archive"), dir.resolve("quarantine"))
+      }
+      assert(r.success == archived && r.rowCount == rowsOut, s"$f: ${r.message}")
+      assert(jobs == 1, s"$f: $jobs jobs")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+
+    val (_, m) = TransformEngine.transform(
+      TemplateReader.read(spark, dir.resolve("archive/plain.csv"), Template(sourceType = "csv")),
+      Template(providerName = Some("p")))
+    val (metrics, jobs) = SparkSpec.jobsOf(spark)(m.compute())
+    assert(metrics("unpivot_before") == ((3L, 3)))
+    assert(jobs == 1, s"compute(): $jobs jobs")
   }
 
   test("filter_and_rename positional header mode takes first N columns") {

@@ -232,6 +232,97 @@ class XlsxSourcesSpec extends SparkSpec {
     assert(r.getString(0) == "1" && r.getString(1) == "x")
   }
 
+  private def csvReader(t: Template) = spark.read.option("sep", t.delimiter)
+    .option("encoding", t.encoding).option("nullValue", "")
+
+  test("CSV header parity: driver-read names equal Spark's header inference") {
+    def utf8(s: String) = s.getBytes("UTF-8")
+    val cases: Seq[(String, Array[Byte], Template)] = Seq(
+      ("blank leading lines", utf8("\n  \n\na,b\n1,2\n\n3,4\n"), Template()),
+      ("empty header cells", utf8("a,,c,\n1,2,3,4\n"), Template()),
+      ("case-insensitive duplicates", utf8("Name,name,x,x,y\n1,2,3,4,5\n"), Template()),
+      ("quoted cell with the delimiter", utf8("\"a,b\",c\n\"1,2\",3\n"), Template()),
+      ("semicolons", utf8("a;b;c\n1;2;3\n"), Template(delimiter = ";")),
+      ("latin-1", "café;naïve\nà;ü\n".getBytes("ISO-8859-1"),
+        Template(delimiter = ";", encoding = "ISO-8859-1")),
+      ("empty file", Array.emptyByteArray, Template()))
+    cases.foreach { case (name, bytes, t) =>
+      val p = tmp.resolve("h.csv")
+      Files.write(p, bytes)
+      val inferred = csvReader(t).option("header", "true").csv(p.toString)
+      val (df, jobs) = SparkSpec.jobsOf(spark)(TemplateReader.readCsv(spark, p, t))
+      assert(jobs == 0, s"$name: the read launched $jobs jobs")
+      assert(df.columns.toSeq == inferred.columns.toSeq, name)
+      assert(df.collect().toSeq == inferred.collect().toSeq, name)
+    }
+    // a directory of part files, as Spark writes a CSV
+    val parts = tmp.resolve("parts")
+    spark.range(6).selectExpr("id AS k", "id * 2 AS v").repartition(3)
+      .write.option("header", "true").csv(parts.toString)
+    val inferred = csvReader(Template()).option("header", "true").csv(parts.toString)
+    val df = TemplateReader.readCsv(spark, parts, Template())
+    assert(df.columns.toSeq == inferred.columns.toSeq)
+    assert(df.collect().map(_.toString).sorted.toSeq ==
+      inferred.collect().map(_.toString).sorted.toSeq)
+  }
+
+  // the reference semantics on Spark's raw records, numbered by zipWithIndex
+  private def replay(p: java.nio.file.Path, t: Template) = {
+    val raw = csvReader(t).option("header", "false").csv(p.toString)
+    val headerRaw = Iterator.from(0).filterNot(t.skiprows.contains).drop(t.headerRow).next()
+    val indexed = raw.rdd.zipWithIndex().collect().toSeq
+    val names = indexed.collectFirst { case (r, i) if i == headerRaw =>
+      r.toSeq.map(v => if (v == null) "" else v.toString)
+    }.getOrElse(raw.columns.toSeq).zipWithIndex.map {
+      case ("", i) => s"Unnamed: $i"
+      case (n, _) => n
+    }
+    (names, indexed.collect {
+      case (r, i) if i > headerRaw && !t.skiprows.contains(i.toInt) => r
+    })
+  }
+
+  test("CSV header_row/skiprows parity with the raw-record-index replay") {
+    val cases: Seq[(String, Template)] = Seq(
+      ("banner;;\nskipme;;\ncol_a;col_b;col_c\n1;x;10\n2;y;20\n",
+        Template(delimiter = ";", headerRow = 1, skiprows = List(1))),
+      ("title,,\n\nsub,,\n\nk,,v\n1,2,3\n\n4,5,6\nskip,me,x\n7,8,9\n",
+        Template(headerRow = 2, skiprows = List(5))),
+      ("narrow title\nsub,\nk,,v\n1,2,3\n", Template(headerRow = 2)),
+      ("a,b,c\nx,y\n1,2,3\n4,5,6,7\n", Template(headerRow = 1)),
+      ("a,b\n", Template(headerRow = 3)),
+      ("skip,me\nh1,h2\n1,2\n", Template(skiprows = List(0))))
+    cases.foreach { case (text, t) =>
+      val p = tmp.resolve("r.csv")
+      Files.writeString(p, text)
+      val (names, rows) = replay(p, t)
+      val (df, jobs) = SparkSpec.jobsOf(spark)(TemplateReader.readCsv(spark, p, t))
+      assert(jobs == 0, text)
+      assert(df.columns.toSeq == names, text)
+      assert(df.collect().toSeq == rows, text)
+    }
+  }
+
+  test("CSV header_row/skiprows stay exact when the file splits") {
+    val p = tmp.resolve("split.csv")
+    Files.writeString(p, "banner,,\nskipme,,\nk,v,w\n" +
+      (1 to 40).map(i => s"$i,x$i,y$i\n").mkString)
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val prev = keys.map(spark.conf.get)
+    keys.foreach(spark.conf.set(_, "64"))
+    try {
+      val t = Template(headerRow = 1, skiprows = List(1))
+      val df = TemplateReader.readCsv(spark, p, t)
+      assert(df.rdd.getNumPartitions > 1)
+      val (names, rows) = replay(p, t)
+      assert(df.columns.toSeq == names)
+      assert(df.collect().toSeq == rows)
+      // a skipped record past the first split cannot be dropped by row id
+      intercept[UnsupportedOperationException](
+        TemplateReader.readCsv(spark, p, t.copy(skiprows = List(1, 30))))
+    } finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("upload bytes parse like a path read (S9)") {
     val bytes = "k,v\n1,a\n2,b\n".getBytes("UTF-8")
     val df = TemplateReader.readBytes(spark, bytes, "up.csv", Template())
