@@ -19,12 +19,7 @@ object Bucketing {
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
       keys: Seq[String], sortCols: Seq[String] = Nil): Unit = {
     require(keys.nonEmpty, "bucketing needs at least one key")
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Warehouse.dropTableWithDir(df.sparkSession, table)
     val w = df.write.mode("overwrite")
       .bucketBy(buckets, keys.head, keys.tail: _*)
     val sorted = if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w

@@ -1057,10 +1057,10 @@ object Dedup {
       l: Int, table: String): Unit = {
     require(l >= 2, "window length l must be >= 2")
     val spark = df.sparkSession
-    dropWithDir(spark, table)
+    Warehouse.dropTableWithDir(spark, table)
     docKeyCounts(df, idCol, textCol, l)
       .write.mode("overwrite").format("parquet").saveAsTable(table)
-    dropWithDir(spark, s"${table}_meta")
+    Warehouse.dropTableWithDir(spark, s"${table}_meta")
     df.agg(max(col(idCol)).as("max_id"))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_meta")
@@ -1073,18 +1073,6 @@ object Dedup {
     substrOcc(substrBase(df, textCol), idCol, l)
       .select(col(idCol), col("__h")).distinct()
       .groupBy("__h").agg(count(lit(1)).as("__n"))
-
-  /** Drop a managed table AND its warehouse directory — a fresh session
-    * sees leftover directories from a previous run as
-    * LOCATION_ALREADY_EXISTS (the Similarity/Retrieval builder idiom). */
-  private def dropWithDir(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(wh, name.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-  }
 
   /** Advance the key state past a processed batch: the batch's
     * per-key doc counts APPEND to the table (cross-batch rows for one
@@ -1163,14 +1151,14 @@ object Dedup {
   def compactSubstringKeys(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
     val stagingT = s"${table}_compact_staging"
-    dropWithDir(spark, stagingT)
+    Warehouse.dropTableWithDir(spark, stagingT)
     spark.table(table).groupBy("__h").agg(sum(col("__n")).as("__n"))
       .filter(col("__n") > 0L)
       .write.mode("overwrite").format("parquet").saveAsTable(stagingT)
-    dropWithDir(spark, table)
+    Warehouse.dropTableWithDir(spark, table)
     spark.table(stagingT).write.mode("overwrite").format("parquet")
       .saveAsTable(table)
-    dropWithDir(spark, stagingT)
+    Warehouse.dropTableWithDir(spark, stagingT)
   }
 
   /** [[incrementalSubstringDedup]] against the PERSISTED key state

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
 
 /** The applied-batch LEDGER of a streaming file ingest, shared by the
@@ -38,6 +39,42 @@ private[graft] object IngestLedger {
     * id ≤ `through` or id ∈ `extra`. */
   final case class Applied(through: Long, extra: Set[Long]) {
     def contains(id: Long): Boolean = id <= through || extra(id)
+  }
+
+  /** The exactly-once file-stream ingest both index families run: tail
+    * `feedDir` (`maxFilesPerTrigger = 1`, one micro-batch per file) to
+    * completion with `Trigger.AvailableNow`, committing each micro-batch
+    * through `foreachBatch`. A batch already in the ledger is skipped;
+    * the first unrecorded batch after a (re)start runs the family's
+    * `repair` before its `append`; every applied batch is recorded.
+    * Without a durable `checkpointDir` the stream runs on a fresh temp
+    * checkpoint named after `label`. */
+  def ingestFeed(spark: org.apache.spark.sql.SparkSession, feedDir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      checkpointDir: Option[String], label: String)(
+      repair: DataFrame => Unit, append: DataFrame => Unit): Unit = {
+    import org.apache.spark.sql.streaming.Trigger
+    val ckpt = checkpointDir.getOrElse(
+      java.nio.file.Files.createTempDirectory(s"${label}_ckpt").toString)
+    // only the FIRST unrecorded batch after a (re)start can be a replay
+    // of a crashed attempt; batches after it committed synchronously
+    @volatile var mayHaveOrphans = true
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(feedDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val s2 = batch.sparkSession
+        if (!appliedBatchIds(s2, ckpt).contains(batchId)) {
+          if (mayHaveOrphans) repair(batch)
+          append(batch)
+          recordAppliedBatch(s2, ckpt, batchId)
+        }
+        mayHaveOrphans = false
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
   }
 
   def appliedBatchIds(spark: org.apache.spark.sql.SparkSession,

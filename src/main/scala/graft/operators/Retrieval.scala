@@ -23,6 +23,7 @@ import org.apache.spark.sql.functions._
   * most k rows per query into the shuffle.
   */
 object Retrieval {
+  import Warehouse.dropTableWithDir
 
   /** ln 2 as the shortest-round-trip double literal, hard-coded (not
     * `math.log(2.0)`) so the DuckDB oracle can spell the bit-identical
@@ -487,21 +488,6 @@ object Retrieval {
     try out.write(gen.toString.getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-  }
-
-  /** Drop a table AND its leftover warehouse directory (the
-    * replaceSmallTable cleanup, without the rewrite). Skips the DROP
-    * statement when the catalog has no such table — the hygiene drops in
-    * [[buildPostingsIndex]] hit several usually-absent companions, and a
-    * parsed no-op DDL per absent table is measurable ingest overhead. */
-  private def dropTableWithDir(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    if (spark.catalog.tableExists(name))
-      spark.sql(s"DROP TABLE `$name`")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(wh, name.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
   }
 
   /** Drop-and-overwrite a small companion table. Idempotent across
@@ -1015,35 +1001,23 @@ object Retrieval {
       buckets: Int = 8, batches: Int = 4, maxRows: Int = 250000): Unit = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = docs
+    val sorted = graft.streaming.Replay.collectBounded(docs
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)].collect()
-    require(rows.length <= maxRows,
-      s"streamingIndexIngestReplay: ${rows.length} docs exceed the " +
-        s"replay-harness bound $maxRows — use readStream in production")
-    val sorted = rows.sortBy(_._1)
+      .as[(Long, String)], "streamingIndexIngestReplay", maxRows)
+      .sortBy(_._1)
     // empty seed: postings/bucket spec + zeroed companions
     buildPostingsIndex(
       spark.createDataset(Seq.empty[(Long, String)]).toDF(idCol, textCol),
       idCol, textCol, table, buckets)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val streamDf = mem.toDF().toDF(idCol, textCol)
-    val ckpt = java.nio.file.Files.createTempDirectory("ix_ckpt").toString
-    val q = streamDf.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendToPostingsIndex(batch, idCol, textCol, table, buckets)
-      }
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      val chunk =
-        math.max(1, math.ceil(sorted.length.toDouble / batches).toInt)
-      sorted.grouped(chunk).foreach { c =>
-        mem.addData(c.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    graft.streaming.Replay.run(spark, "ix",
+        graft.streaming.Replay.feed(mem, sorted, batches)) {
+      mem.toDF().toDF(idCol, textCol).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          appendToPostingsIndex(batch, idCol, textCol, table, buckets)
+        }
+    }
     // the micro-batches committed through foreachBatch's CLONED session;
     // refresh this session's relation cache so no reader lists files a
     // micro-batch rewrite replaced (the IVF twin's hazard, avoided
@@ -1150,7 +1124,6 @@ object Retrieval {
       buckets: Int = 8, withPositional: Boolean = false,
       champTopN: Int = 0, checkpointDir: Option[String] = None,
       boundsBlocks: Int = 0): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     // eager schema read: the feed directory must already hold >= 1
     // parquet file when ingest starts (readStream needs a schema and
     // cannot infer one from an empty directory) — seed the feed with its
@@ -1179,29 +1152,11 @@ object Retrieval {
         buildBlockMax(spark, table, boundsBlocks)
       }
     }
-    val ckpt = checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("ix_feed_ckpt").toString)
-    // only the FIRST unrecorded batch after a (re)start can be a replay
-    // of a crashed attempt; batches after it committed synchronously
-    @volatile var mayHaveOrphans = true
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s2 = batch.sparkSession
-        if (!IngestLedger.appliedBatchIds(s2, ckpt).contains(batchId)) {
-          if (mayHaveOrphans)
-            repairPartialAppend(s2,
-              batch.select(col(idCol).as("doc")), table)
-          appendToPostingsIndex(batch, idCol, textCol, table, buckets)
-          IngestLedger.recordAppliedBatch(s2, ckpt, batchId)
-        }
-        mayHaveOrphans = false
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    IngestLedger.ingestFeed(spark, feedDir, schema, checkpointDir,
+        "ix_feed")(
+      batch => repairPartialAppend(batch.sparkSession,
+        batch.select(col(idCol).as("doc")), table),
+      batch => appendToPostingsIndex(batch, idCol, textCol, table, buckets))
     (Seq(table, s"${table}_tok", s"${table}_stats", s"${table}_docs") ++
         (if (withPositional) Seq(s"${table}_pos") else Nil) ++
         (if (champTopN > 0) Seq(s"${table}_champ") else Nil) ++

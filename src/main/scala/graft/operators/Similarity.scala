@@ -19,6 +19,16 @@ import org.apache.spark.sql.functions._
   *    codegen'd, no UDFs, no driver collects of data rows.
   */
 object Similarity {
+  import Warehouse.dropTableWithDir
+  import graft.SessionConf.withConf
+
+  /** Dynamic partition overwrite for the IVF cell-partition rewrites,
+    * scoped by [[graft.SessionConf.withConf]]. It has to be the SESSION
+    * conf: the DataFrameWriter option form only applies to path-based
+    * save(), and a catalog insertInto silently falls back to a static
+    * overwrite under it. */
+  private val DynamicOverwrite =
+    "spark.sql.sources.partitionOverwriteMode" -> "dynamic"
 
   /** Elementwise dot product of two double-array columns — a native
     * codegen'd expression (the `aggregate(zip_with(...))` formulation is
@@ -768,17 +778,17 @@ object Similarity {
     // guide §2.6)
     Par.all(Seq(
       () => {
-        dropWithDir(spark, table)
+        dropTableWithDir(spark, table)
         data.select(col(idCol), col(cellCol), col(vecCol))
           .write.mode("overwrite").format("parquet")
           .partitionBy(cellCol).saveAsTable(table)
       },
       () => {
-        dropWithDir(spark, s"${table}_cstate")
+        dropTableWithDir(spark, s"${table}_cstate")
         centroidState(data, cellCol, vecCol)
           .write.mode("overwrite").format("parquet")
           .saveAsTable(s"${table}_cstate")
-        dropWithDir(spark, s"${table}_centroids")
+        dropTableWithDir(spark, s"${table}_centroids")
         centroidsFromState(spark.table(s"${table}_cstate"))
           .write.mode("overwrite").format("parquet")
           .saveAsTable(s"${table}_centroids")
@@ -787,7 +797,7 @@ object Similarity {
     // quantized serving companions (the stale-champion defect class):
     // the grid and codes describe the OLD corpus
     Seq("_codes", "_cdims", "_cmeta")
-      .foreach(s => dropWithDir(spark, s"$table$s"))
+      .foreach(s => dropTableWithDir(spark, s"$table$s"))
   }
 
   /** SQ8 codes of a vector frame under `table`'s FROZEN grid
@@ -1012,7 +1022,7 @@ object Similarity {
       if (rebalance) {
         rebalanceIvfCells(spark, table, idCol, cellCol, vecCol,
           splitAbove, mergeBelow)
-        dropWithDir(spark, s"${table}_rmeta")
+        dropTableWithDir(spark, s"${table}_rmeta")
         spark.range(1)
           .select(lit(genBefore + 1L).as("rebalance_gen"))
           .write.mode("overwrite").format("parquet")
@@ -1047,15 +1057,15 @@ object Similarity {
       .select(posexplode(asDouble(col(vecCol))).as(Seq("pos", "v")))
       .groupBy("pos")
       .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-    dropWithDir(spark, s"${table}_cdims")
+    dropTableWithDir(spark, s"${table}_cdims")
     dims.write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_cdims")
-    dropWithDir(spark, s"${table}_cmeta")
+    dropTableWithDir(spark, s"${table}_cmeta")
     spark.range(1).select(lit(levels).as("levels"),
         lit(gridGen).as("grid_gen"))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_cmeta")
-    dropWithDir(spark, s"${table}_codes")
+    dropTableWithDir(spark, s"${table}_codes")
     sqCodesOf(spark, data, idCol, cellCol, vecCol, table)
       .write.mode("overwrite").format("parquet")
       .partitionBy(cellCol).saveAsTable(s"${table}_codes")
@@ -1147,15 +1157,6 @@ object Similarity {
       .select(col(idCol), round(col("adc_cosine"), 4).as("adc_cosine"),
         round(col("__cos"), 4).as("cosine"), col("rank"))
       .orderBy("rank")
-  }
-
-  private def dropWithDir(spark: org.apache.spark.sql.SparkSession,
-      name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(wh, name.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
   }
 
   /** Per-(cell, dim) centroid STATE `(cell, i, cs, cn)` with exact
@@ -1332,7 +1333,7 @@ object Similarity {
       cellCol: String, vecCol: String): Unit = {
     val delT = s"${table}_delete_staging"
     val survT = s"${table}_survivor_staging"
-    dropWithDir(spark, delT)
+    dropTableWithDir(spark, delT)
     spark.table(table)
       .join(broadcast(deleteIds.select(col(idCol)).distinct()), Seq(idCol),
         "left_semi")
@@ -1343,7 +1344,7 @@ object Similarity {
     val affected = delS.select(col(cellCol)).distinct().collect()
       .map(_.get(0))
     if (affected.nonEmpty) {
-      dropWithDir(spark, survT)
+      dropTableWithDir(spark, survT)
       spark.table(table).filter(col(cellCol).isin(affected: _*))
         .join(broadcast(delS.select(col(idCol))), Seq(idCol), "left_anti")
         .write.mode("overwrite").format("parquet").saveAsTable(survT)
@@ -1418,17 +1419,10 @@ object Similarity {
           centroidsFromState(spark.table(s"${table}_cstate")),
           s"${table}_centroids")
       }
-      val confKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(confKey)
-      spark.conf.set(confKey, "dynamic")
-      try Par.all(lanes.result())
-      finally prev match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
-      }
-      dropWithDir(spark, survT)
+      withConf(spark, DynamicOverwrite)(Par.all(lanes.result()))
+      dropTableWithDir(spark, survT)
     }
-    dropWithDir(spark, delT)
+    dropTableWithDir(spark, delT)
   }
 
   /** Upsert a vector batch into a [[buildIvfIndex]] index: replace
@@ -1619,7 +1613,7 @@ object Similarity {
       .select(col(idCol), col("__dest").cast(cellType).as(cellCol),
         col(vecCol))
     val stagingT = s"${table}_rebalance_staging"
-    dropWithDir(spark, stagingT)
+    dropTableWithDir(spark, stagingT)
     staged.write.mode("overwrite").format("parquet").saveAsTable(stagingT)
     // Everything below the staged truth splits into two INDEPENDENT
     // lanes on the shared [[Par]] pool (guide §2.6): the vector-table
@@ -1658,7 +1652,7 @@ object Similarity {
       if (spark.catalog.tableExists(s"${table}_codes")) {
         val fresh = sqCodesOf(spark, spark.table(table), idCol, cellCol,
           vecCol, table)
-        dropWithDir(spark, s"${table}_codes")
+        dropTableWithDir(spark, s"${table}_codes")
         fresh.write.mode("overwrite").format("parquet")
           .partitionBy(cellCol).saveAsTable(s"${table}_codes")
       }
@@ -1683,15 +1677,8 @@ object Similarity {
         centroidsFromState(spark.table(s"${table}_cstate")),
         s"${table}_centroids")
     }
-    val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "dynamic")
-    try Par.all(lanes.result())
-    finally prev match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
-    }
-    dropWithDir(spark, stagingT)
+    withConf(spark, DynamicOverwrite)(Par.all(lanes.result()))
+    dropTableWithDir(spark, stagingT)
     } finally if (splitInput != null) splitInput.unpersist()
   }
 
@@ -1736,35 +1723,23 @@ object Similarity {
       table: String, batches: Int = 4, maxRows: Int = 250000): Unit = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = data.select(col(idCol).cast("long"),
-        col(cellCol).cast("int"), col(vecCol))
-      .as[(Long, Int, Seq[Float])].collect()
-    require(rows.length <= maxRows,
-      s"streamingIvfIngestReplay: ${rows.length} vectors exceed the " +
-        s"replay-harness bound $maxRows — use readStream in production")
-    val sorted = rows.sortBy(_._1)
+    val sorted = graft.streaming.Replay.collectBounded(data
+      .select(col(idCol).cast("long"), col(cellCol).cast("int"), col(vecCol))
+      .as[(Long, Int, Seq[Float])], "streamingIvfIngestReplay", maxRows)
+      .sortBy(_._1)
     buildIvfIndex(
       spark.createDataset(Seq.empty[(Long, Int, Seq[Float])])
         .toDF(idCol, cellCol, vecCol),
       idCol, cellCol, vecCol, table)
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Int, Seq[Float])]
-    val streamDf = mem.toDF().toDF(idCol, cellCol, vecCol)
-    val ckpt = java.nio.file.Files.createTempDirectory("ivf_ckpt").toString
-    val q = streamDf.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendToIvfIndex(batch, idCol, cellCol, vecCol, table)
-      }
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      val chunk =
-        math.max(1, math.ceil(sorted.length.toDouble / batches).toInt)
-      sorted.grouped(chunk).foreach { c =>
-        mem.addData(c.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    graft.streaming.Replay.run(spark, "ivf",
+        graft.streaming.Replay.feed(mem, sorted, batches)) {
+      mem.toDF().toDF(idCol, cellCol, vecCol).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          appendToIvfIndex(batch, idCol, cellCol, vecCol, table)
+        }
+    }
     // the micro-batches committed through foreachBatch's CLONED session;
     // its table rewrites don't invalidate THIS session's relation cache
     // (the empty-seed build read _cstate back here, caching its file
@@ -1790,31 +1765,25 @@ object Similarity {
       idCol: String, table: String, cellCol: String,
       vecCol: String): Unit = {
     val delT = s"${table}_repair_staging"
-    dropWithDir(spark, delT)
+    dropTableWithDir(spark, delT)
     spark.table(table)
       .join(broadcast(ids.select(col(idCol)).distinct()), Seq(idCol),
         "left_semi")
       .write.mode("overwrite").format("parquet").saveAsTable(delT)
     val delS = spark.table(delT)
-    if (delS.isEmpty) { dropWithDir(spark, delT); return }
+    if (delS.isEmpty) { dropTableWithDir(spark, delT); return }
     // |cells|-bounded collects, as in deleteFromIvfIndex
     val affected = delS.select(col(cellCol)).distinct().collect()
       .map(_.get(0))
     val survT = s"${table}_repair_surv_staging"
-    dropWithDir(spark, survT)
+    dropTableWithDir(spark, survT)
     spark.table(table).filter(col(cellCol).isin(affected: _*))
       .join(broadcast(delS.select(col(idCol))), Seq(idCol), "left_anti")
       .write.mode("overwrite").format("parquet").saveAsTable(survT)
-    val confKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "dynamic")
-    try {
+    withConf(spark, DynamicOverwrite) {
       spark.table(survT)
         .select(spark.table(table).columns.map(col).toIndexedSeq: _*)
         .write.mode("overwrite").insertInto(table)
-    } finally prev match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
     }
     val survCells = spark.table(survT).select(col(cellCol)).distinct()
       .collect().map(_.get(0)).toSet
@@ -1824,11 +1793,11 @@ object Similarity {
         s"PARTITION (`$cellCol`='$v')")
     }
     spark.catalog.refreshTable(table)
-    dropWithDir(spark, s"${table}_cstate")
+    dropTableWithDir(spark, s"${table}_cstate")
     centroidState(spark.table(table), cellCol, vecCol)
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_cstate")
-    dropWithDir(spark, s"${table}_centroids")
+    dropTableWithDir(spark, s"${table}_centroids")
     centroidsFromState(spark.table(s"${table}_cstate"))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_centroids")
@@ -1842,14 +1811,11 @@ object Similarity {
       val repCodes = sqCodesOf(spark,
         spark.table(table).filter(col(cellCol).isin(affected: _*)),
         idCol, cellCol, vecCol, table)
-      spark.conf.set(confKey, "dynamic")
-      try repCodes
-        .select(spark.table(s"${table}_codes").columns
-          .map(col).toIndexedSeq: _*)
-        .write.mode("overwrite").insertInto(s"${table}_codes")
-      finally prev match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
+      withConf(spark, DynamicOverwrite) {
+        repCodes
+          .select(spark.table(s"${table}_codes").columns
+            .map(col).toIndexedSeq: _*)
+          .write.mode("overwrite").insertInto(s"${table}_codes")
       }
       affected.filterNot(survCells).foreach { c =>
         val v = c.toString.replace("'", "''")
@@ -1858,8 +1824,8 @@ object Similarity {
       }
       spark.catalog.refreshTable(s"${table}_codes")
     }
-    dropWithDir(spark, survT)
-    dropWithDir(spark, delT)
+    dropTableWithDir(spark, survT)
+    dropTableWithDir(spark, delT)
   }
 
   /** THE production deploy shape for dense-index ingest — the IVF twin
@@ -1886,7 +1852,6 @@ object Similarity {
   def fileStreamIvfIngest(spark: org.apache.spark.sql.SparkSession,
       feedDir: String, idCol: String, cellCol: String, vecCol: String,
       table: String, checkpointDir: Option[String] = None): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     // eager schema read: the feed directory must already hold >= 1
     // parquet file when ingest starts (readStream cannot infer a schema
     // from an empty directory)
@@ -1897,27 +1862,11 @@ object Similarity {
       buildIvfIndex(spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
         idCol, cellCol, vecCol, table)
-    val ckpt = checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("ivf_feed_ckpt").toString)
-    @volatile var mayHaveOrphans = true
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s2 = batch.sparkSession
-        if (!IngestLedger.appliedBatchIds(s2, ckpt).contains(batchId)) {
-          if (mayHaveOrphans)
-            repairPartialIvfAppend(s2, batch.select(col(idCol)), idCol,
-              table, cellCol, vecCol)
-          appendToIvfIndex(batch, idCol, cellCol, vecCol, table)
-          IngestLedger.recordAppliedBatch(s2, ckpt, batchId)
-        }
-        mayHaveOrphans = false
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    IngestLedger.ingestFeed(spark, feedDir, schema, checkpointDir,
+        "ivf_feed")(
+      batch => repairPartialIvfAppend(batch.sparkSession,
+        batch.select(col(idCol)), idCol, table, cellCol, vecCol),
+      batch => appendToIvfIndex(batch, idCol, cellCol, vecCol, table))
     Seq(table, s"${table}_cstate", s"${table}_centroids")
       .foreach(spark.catalog.refreshTable)
   }
@@ -2004,10 +1953,10 @@ object Similarity {
       .join(routeToNearestCell(spark, table, vecs, idCol, vecCol)
         .withColumnRenamed("cell", "__newcell"), idCol)
       .select(col(idCol), col("__newcell").as(cellCol), col(vecCol))
-    dropWithDir(spark, staging)
+    dropTableWithDir(spark, staging)
     refined.write.mode("overwrite").format("parquet").saveAsTable(staging)
     buildIvfIndex(spark.table(staging), idCol, cellCol, vecCol, table)
-    dropWithDir(spark, staging)
+    dropTableWithDir(spark, staging)
   }
 
   /** [[ivfTopK]] over a [[buildIvfIndex]] table: identical output (same

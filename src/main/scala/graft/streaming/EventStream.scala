@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.SessionConf.withConf
+import Replay.collectBounded
 
 /** Structured Streaming layer over the `events` shape (beyond-reference: the
   * reference is batch-only, SURVEY §2.12; this is the Spark-native extension
@@ -17,7 +20,11 @@ object EventStream {
   /** Hard driver-side bound for replay-harness inputs. The `*Replay`
     * helpers exist to HASH-GATE the streaming state path: they collect a
     * bounded events frame on the driver and feed it back through a
-    * MemoryStream in timestamp-ordered micro-batches. That is the right
+    * MemoryStream in timestamp-ordered micro-batches. All of them (and the
+    * two index-ingest replays in `graft.operators`) run that loop through
+    * ONE driver, [[Replay]]: bounded collect, chunking, checkpoint, one
+    * drain per step, stop; each replay supplies only its plan, sink,
+    * sentinel flush steps and conf overrides. That is the right
     * gate design (the state machine, not just the batch plan, is what is
     * verified) but it means a misrouted corpus-scale frame would OOM the
     * driver — so every replay helper refuses inputs past this cap with a
@@ -31,22 +38,6 @@ object EventStream {
     * tuples at the widest replay row, well inside the 8 GiB driver) —
     * while a misrouted corpus-scale frame still fails fast. */
   val ReplayInputMaxRows: Int = 4000000
-
-  /** Collect a replay input with the [[ReplayInputMaxRows]] guard: the
-    * LIMIT rides into the collect job itself (no extra counting pass), and
-    * one row past the cap proves the overflow. */
-  private def collectBounded[T](ds: org.apache.spark.sql.Dataset[T],
-      helper: String, maxRows: Int): Array[T] = {
-    require(maxRows >= 1 && maxRows <= ReplayInputMaxRows,
-      s"$helper: maxRows=$maxRows out of [1, $ReplayInputMaxRows]")
-    val arr = ds.limit(maxRows + 1).collect()
-    require(arr.length <= maxRows,
-      s"$helper: replay input exceeds maxRows=$maxRows rows. Replay " +
-        "harnesses materialize their bounded input on the driver to feed " +
-        "micro-batches (verification use); route large streams through " +
-        "the production entry point (a pure streaming plan) instead.")
-    arr
-  }
 
   /** Tumbling-window counts + sums per event type. On a stream, the 10-minute
     * watermark bounds state; on a batch frame it is a no-op. Partial
@@ -126,7 +117,7 @@ object EventStream {
         lit("__sentinel").as("event_type"), lit(0.0).as("value"))
       .coalesce(1).write.mode("append").parquet(inDir)
     val schema = spark.read.parquet(inDir).schema
-    withReplayShuffle(spark) {
+    withConf(spark, replayShuffle()) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
       val q = windowedCountsExact(stream, windowLength)
@@ -163,7 +154,7 @@ object EventStream {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("value", DoubleType)))
-    def run(): Unit = withReplayShuffle(spark) {
+    withConf(spark, (if (rocksDb) RocksDb else Nil) :+ replayShuffle(): _*) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
       val q = sessionWindows(stream, gap, watermark)
@@ -174,7 +165,6 @@ object EventStream {
         .start()
       q.awaitTermination()
     }
-    if (rocksDb) withRocksDb(spark)(run()) else run()
   }
 
   /** Native session-window aggregation — Spark's `session_window` groupBy
@@ -249,24 +239,9 @@ object EventStream {
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
     val streamDf = mem.toDF().toDF("user_id", "ts_us", "value")
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"), col("value"))
-    val name = "sesswin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("sesswin_ckpt").toString
-    withReplayShuffle(spark) {
-      val q = sessionWindows(streamDf, gap, watermark = gap)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(users.map(u => (u, sentinelUs, 0.0)))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(name)
+    Replay.toMemory(spark, "sesswin",
+      Replay.feed(mem, rows, batches, users.map(u => (u, sentinelUs, 0.0))),
+      Seq(replayShuffle()))(sessionWindows(streamDf, gap, watermark = gap))
   }
 
   /** Per-user sessionization with mapGroupsWithState: a session closes after
@@ -378,27 +353,12 @@ object EventStream {
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"),
         round(col("__tv").cast("double"), 2).as("total_value"))
-    val name = "dedupsess_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("dedupsess_ckpt").toString
-    withNoDataBatchesOff(spark) { withReplayShuffle(spark) {
-      val q = chained.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(doubled.length.toDouble / batches).toInt)
-        doubled.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(users.zipWithIndex.map { case (u, i) =>
-          (-1L - i, u, sentinelUs, 0.0) })
-        q.processAllAvailable()
-        mem.addData(users.zipWithIndex.map { case (u, i) =>
-          (-1000000L - i, u, sentinelUs + gapTotalUs, 0.0) })
-        q.processAllAvailable()
-      } finally q.stop()
-    } }
-    spark.table(name)
+    Replay.toMemory(spark, "dedupsess",
+      Replay.feed(mem, doubled, batches,
+        users.zipWithIndex.map { case (u, i) => (-1L - i, u, sentinelUs, 0.0) },
+        users.zipWithIndex.map { case (u, i) =>
+          (-1000000L - i, u, sentinelUs + gapTotalUs, 0.0) }),
+      Seq(NoDataBatchesOff, replayShuffle()))(chained)
   }
 
   /** [[sessionizeFull]] driven by EVENT-TIME TIMEOUTS — the third state
@@ -481,28 +441,14 @@ object EventStream {
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
     val streamDf = mem.toDF().toDF("user_id", "ts_us")
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
-    val name = "tsessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("tsess_ckpt").toString
-    withNoDataBatchesOff(spark) { withReplayShuffle(spark) {
-      val q = sessionizeTimeout(streamDf, gapSeconds)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        // batch 1: watermark jumps past every last-event + gap;
-        // batch 2: the fired timeouts are processed and their sessions emitted
-        mem.addData(Seq((-1L, sentinelUs)))
-        q.processAllAvailable()
-        mem.addData(Seq((-1L, sentinelUs + 2 * gapUs)))
-        q.processAllAvailable()
-      } finally q.stop()
-    } }
-    spark.table(name).filter(col("user_id") >= 0)
+    // flush 1: watermark jumps past every last-event + gap;
+    // flush 2: the fired timeouts are processed and their sessions emitted
+    Replay.toMemory(spark, "tsessions",
+      Replay.feed(mem, rows, batches,
+        Seq((-1L, sentinelUs)), Seq((-1L, sentinelUs + 2 * gapUs))),
+      Seq(NoDataBatchesOff, replayShuffle()))(
+      sessionizeTimeout(streamDf, gapSeconds))
+      .filter(col("user_id") >= 0)
   }
 
   /** [[sessionizeFull]] on Spark 4's `transformWithState` — the arbitrary-
@@ -652,14 +598,14 @@ object EventStream {
   def sessionizeTwsReplay(spark: SparkSession, events: DataFrame,
       gapSeconds: Long = 1800, batches: Int = 4,
       maxRows: Int = ReplayInputMaxRows): DataFrame =
-    runTwsReplay(spark, events, gapSeconds, batches, maxRows)._1
+    runTwsReplay(spark, events, gapSeconds, batches, maxRows, None)
 
-  /** [[sessionizeTwsReplay]] body, also handing back the query's
-    * checkpoint location so [[twsStateSnapshot]] can batch-read the
-    * RocksDB state it left behind. */
+  /** [[sessionizeTwsReplay]] body. [[twsStateSnapshot]] passes its own
+    * `checkpoint` directory, which is kept so it can batch-read the
+    * RocksDB state the query left behind. */
   private def runTwsReplay(spark: SparkSession, events: DataFrame,
-      gapSeconds: Long, batches: Int,
-      maxRows: Int = ReplayInputMaxRows): (DataFrame, String) = {
+      gapSeconds: Long, batches: Int, maxRows: Int,
+      checkpoint: Option[String]): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = collectBounded(
@@ -673,26 +619,12 @@ object EventStream {
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
     val streamDf = mem.toDF().toDF("user_id", "ts_us")
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
-    val name = "wsessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("wsess_ckpt").toString
-    try withRocksDb(spark) { withReplayShuffle(spark, 4) {
-      val q = sessionizeTws(streamDf, gapSeconds)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(Seq((-1L, sentinelUs)))
-        q.processAllAvailable()
-        mem.addData(Seq((-1L, sentinelUs + 2 * gapUs)))
-        q.processAllAvailable()
-      } finally q.stop()
-    } }
-    (spark.table(name).filter(col("user_id") >= 0), ckpt)
+    Replay.toMemory(spark, "wsessions",
+      Replay.feed(mem, rows, batches,
+        Seq((-1L, sentinelUs)), Seq((-1L, sentinelUs + 2 * gapUs))),
+      RocksDb :+ replayShuffle(4), checkpoint)(
+      sessionizeTws(streamDf, gapSeconds))
+      .filter(col("user_id") >= 0)
   }
 
   /** The remaining two transformWithState primitives, each gated through
@@ -752,28 +684,18 @@ object EventStream {
 
   /** Replay `events` through a no-output stateful processor and hand back
     * the checkpoint for state introspection (no watermark, no timers —
-    * TimeMode.None; the drain IS the last processed batch). */
+    * TimeMode.None; the drain IS the last processed batch). The
+    * checkpoint is kept: the snapshot readers' lazy `statestore` frames
+    * read it. */
   private def runSilentStateReplay[T <: Product : org.apache.spark.sql.Encoder](
       spark: SparkSession, rows: Seq[T], toStream: DataFrame => DataFrame,
       batches: Int): String = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-    val name = "silent_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val ckpt = java.nio.file.Files.createTempDirectory("silent_ckpt").toString
-    withRocksDb(spark) { withReplayShuffle(spark, 4) {
-      val q = toStream(mem.toDF())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } }
+    Replay.toMemory(spark, "silent", Replay.feed(mem, rows, batches),
+      RocksDb :+ replayShuffle(4), Some(ckpt))(toStream(mem.toDF()))
     ckpt
   }
 
@@ -902,54 +824,33 @@ object EventStream {
       .withWatermark("ts", "0 seconds")
       .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
       .as[(Long, java.sql.Timestamp, Long)]
-    val name = "bsessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("bsess_ckpt").toString
-    withRocksDb(spark) { withReplayShuffle(spark, 4) {
-      val q = streamTyped.groupByKey(_._1)
+    val streamed = Replay.toMemory(spark, "bsessions",
+      Replay.feed(mem, rows, batches,
+        Seq((-1L, sentinelUs)), Seq((-1L, sentinelUs + 2 * gapUs))),
+      RocksDb :+ replayShuffle(4)) {
+      streamTyped.groupByKey(_._1)
         .transformWithState(new SessionBootstrapProcessor(gapSeconds),
           TimeMode.EventTime(), OutputMode.Append(), handoff,
           Encoders.product[ClosedSession], Encoders.product[OpenSession])
         .toDF()
         .select(col("user_id"), col("session_id"), col("n_events"),
           timestamp_micros(col("start_us")).as("session_start"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(Seq((-1L, sentinelUs)))
-        q.processAllAvailable()
-        mem.addData(Seq((-1L, sentinelUs + 2 * gapUs)))
-        q.processAllAvailable()
-      } finally q.stop()
-    } }
-    closedBatch.unionByName(
-      spark.table(name).filter(col("user_id") >= 0))
+    }
+    closedBatch.unionByName(streamed.filter(col("user_id") >= 0))
   }
 
-  /** Run `body` with the RocksDB state store provider + changelog
-    * checkpointing swapped in (restored after): transformWithState only
-    * runs on RocksDB, and changelog checkpointing makes each micro-batch
-    * commit upload only the delta (full snapshots move to background
-    * maintenance) — the production-recommended setting once state is
-    * large, and measurably faster even on the local replay. */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val swapped = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prev = swapped.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    swapped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  /** Conf overrides for the RocksDB state store provider + changelog
+    * checkpointing (scoped by [[graft.SessionConf.withConf]]):
+    * transformWithState only runs on RocksDB, and changelog
+    * checkpointing makes each micro-batch commit upload only the delta
+    * (full snapshots move to background maintenance) — the
+    * production-recommended setting once state is large, and measurably
+    * faster even on the local replay. */
+  private val RocksDb = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
 
   /** Batch-introspect the streaming state [[sessionizeTws]] leaves behind,
     * via Spark 4's state data source (SPARK-45511): after the watermark
@@ -961,10 +862,16 @@ object EventStream {
     * carried ordinal (breaking the NEXT day's resume) is invisible to
     * x15/x122/x123 and caught only here. At scale this reader is the
     * debugging/repair path for production state: a corrupt store is
-    * diagnosed with a batch query instead of replaying the stream. */
+    * diagnosed with a batch query instead of replaying the stream.
+    *
+    * The returned frame is a lazy `statestore` read of the replay's
+    * checkpoint, so that checkpoint is kept (like those of
+    * [[lastNStateSnapshot]] and [[typeCountsStateSnapshot]]). */
   def twsStateSnapshot(spark: SparkSession, events: DataFrame,
       gapSeconds: Long = 1800, batches: Int = 4): DataFrame = {
-    val (_, ckpt) = runTwsReplay(spark, events, gapSeconds, batches)
+    val ckpt = java.nio.file.Files.createTempDirectory("wsess_ckpt").toString
+    runTwsReplay(spark, events, gapSeconds, batches, ReplayInputMaxRows,
+      Some(ckpt))
     spark.read.format("statestore")
       .option("path", ckpt)
       .option("stateVarName", "session")
@@ -975,25 +882,21 @@ object EventStream {
       .filter(col("user_id") >= 0)
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered:
+  /** Conf override lowering `spark.sql.shuffle.partitions` for a replay:
     * every stateful streaming operator commits one state store PER shuffle
     * partition PER micro-batch, so a small bounded replay pays the session
     * default (32×) in fixed state-store overhead each round regardless of
     * data volume. 8 shards keep the replay parallel while cutting that
     * fixed cost 4×; a production stream sizes the state width to its real
     * key volume instead. Result content is partition-count-independent
-    * (the oracle gates prove it); the previous value is always restored. */
-  private def withReplayShuffle[T](spark: SparkSession, n: Int = 8)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+    * (the oracle gates prove it). */
+  private def replayShuffle(n: Int = 8): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
 
-  /** Disable Spark's no-data micro-batches for a replay whose FINAL
-    * emissions are all driven by explicit sentinel DATA batches (the
-    * two-step sentinel flush: batch 1 jumps the watermark, batch 2
-    * processes the fired timers/evictions). For those replays the
+  /** Conf override disabling Spark's no-data micro-batches for a replay
+    * whose FINAL emissions are all driven by explicit sentinel DATA
+    * batches (the two-step sentinel flush: batch 1 jumps the watermark,
+    * batch 2 processes the fired timers/evictions). For those replays the
     * no-data batches Spark inserts after every data batch re-run the
     * whole micro-batch planning loop and emit nothing — measured
     * 0.54-0.78× on the sessionize-timeout / chained-session /
@@ -1004,16 +907,9 @@ object EventStream {
     * without no-data batches (measured — file feeds have no sentinel
     * mechanism), and the transformWithState list/map-state replays
     * measured 1.7-2.2× SLOWER with them off. Scoped per-operator for
-    * exactly that reason; conf restored on exit. */
-  private def withNoDataBatchesOff[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    * exactly that reason. */
+  private val NoDataBatchesOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
 
   /** Replay a STATIC events frame through [[sessionizeFull]] as a real
     * stream: time-ordered micro-batches into a MemoryStream, then one
@@ -1037,24 +933,9 @@ object EventStream {
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
     val streamDf = mem.toDF().toDF("user_id", "ts_us")
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
-    val name = "sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("sess_ckpt").toString
-    withReplayShuffle(spark) {
-      val q = sessionizeFull(streamDf, gapSeconds)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(users.map(u => (u, sentinelUs)))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(name)
+    Replay.toMemory(spark, "sessions",
+      Replay.feed(mem, rows, batches, users.map(u => (u, sentinelUs))),
+      Seq(replayShuffle()))(sessionizeFull(streamDf, gapSeconds))
   }
 
   /** Streaming dedup: keep the first occurrence per key, with state bounded
@@ -1091,22 +972,8 @@ object EventStream {
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
-    val name = "dedupe_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("dedupe_ckpt").toString
-    withNoDataBatchesOff(spark) { withReplayShuffle(spark) {
-      val q = dedupeStream(streamDf, keys)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } }
-    spark.table(name)
+    Replay.toMemory(spark, "dedupe", Replay.feed(mem, rows, batches),
+      Seq(NoDataBatchesOff, replayShuffle()))(dedupeStream(streamDf, keys))
   }
 
   /** Stream-stream interval join: attribute each purchase to the same
@@ -1161,41 +1028,38 @@ object EventStream {
     def streamDf(m: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]) =
       m.toDF().toDF("event_id", "ts_us", "user_id")
         .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"), col("user_id"))
-    val name = "attr_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("attr_ckpt").toString
-    withNoDataBatchesOff(spark) { withReplayShuffle(spark) {
-      val q = attributionJoin(streamDf(memC), streamDf(memP), withinSeconds,
-          joinType = joinType)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val bounds = cuts :+ Long.MaxValue
-        var (ci, pi) = (0, 0)
-        bounds.foreach { hi =>
-          val cChunk = clicks.drop(ci).takeWhile(_._2 <= hi); ci += cChunk.length
-          val pChunk = purchases.drop(pi).takeWhile(_._2 <= hi); pi += pChunk.length
-          if (cChunk.nonEmpty) memC.addData(cChunk.toSeq)
-          if (pChunk.nonEmpty) memP.addData(pChunk.toSeq)
-          q.processAllAvailable()
-        }
-        if (joinType != "inner") {
-          // OUTER emission is watermark-driven: an unmatched purchase only
-          // surfaces with null click columns once the watermark proves no
-          // matching click can still arrive. Advance both sides twice
-          // (watermark updates at batch END, eviction happens a batch
-          // later) with reserved-user sentinels, filtered below.
-          val maxUs = (clicks.map(_._2) ++ purchases.map(_._2) :+ 0L).max
-          val winUs = withinSeconds * 1000000L
-          Seq(maxUs + 3 * winUs, maxUs + 6 * winUs).foreach { t =>
-            memC.addData(Seq((-1L, t, -1L)))
-            memP.addData(Seq((-2L, t, -1L)))
-            q.processAllAvailable()
-          }
-        }
-      } finally q.stop()
-    } }
-    spark.table(name).filter(col("user_id") >= 0)
+    // both sides advance in lockstep: one step per global time window
+    val bounds = cuts :+ Long.MaxValue
+    def windows(side: Array[(Long, Long, Long)]) = {
+      var rest = side
+      bounds.map { hi => val (c, r) = rest.span(_._2 <= hi); rest = r; c }
+    }
+    val data: Seq[Replay.Step] = windows(clicks).zip(windows(purchases)).map {
+      case (c, p) => () => {
+        if (c.nonEmpty) memC.addData(c.toSeq)
+        if (p.nonEmpty) memP.addData(p.toSeq)
+        ()
+      }
+    }
+    // OUTER emission is watermark-driven: an unmatched purchase only
+    // surfaces with null click columns once the watermark proves no
+    // matching click can still arrive. Advance both sides twice
+    // (watermark updates at batch END, eviction happens a batch later)
+    // with reserved-user sentinels, filtered below.
+    val flush: Seq[Replay.Step] = if (joinType == "inner") Nil else {
+      val maxUs = (clicks.map(_._2) ++ purchases.map(_._2) :+ 0L).max
+      val winUs = withinSeconds * 1000000L
+      Seq(maxUs + 3 * winUs, maxUs + 6 * winUs).map { t => () => {
+        memC.addData(Seq((-1L, t, -1L)))
+        memP.addData(Seq((-2L, t, -1L)))
+        ()
+      } }
+    }
+    Replay.toMemory(spark, "attr", data ++ flush,
+      Seq(NoDataBatchesOff, replayShuffle()))(
+      attributionJoin(streamDf(memC), streamDf(memP), withinSeconds,
+        joinType = joinType))
+      .filter(col("user_id") >= 0)
   }
 
   /** Stream-static enrichment join: each micro-batch joins against the
@@ -1221,21 +1085,10 @@ object EventStream {
     val streamDf = mem.toDF().toDF("event_id", "ts_us", "user_id")
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"))
-    val name = "enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("enrich_ckpt").toString
-    val q = enrichStream(streamDf, dim, col("c_custkey") === col("user_id") + 1)
-      .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-      .start()
-    try {
-      val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-      rows.grouped(chunk).foreach { c =>
-        mem.addData(c.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(name)
+    Replay.toMemory(spark, "enrich", Replay.feed(mem, rows, batches)) {
+      enrichStream(streamDf, dim, col("c_custkey") === col("user_id") + 1)
+        .select(col("event_id"), col("user_id"), col("c_mktsegment"))
+    }
   }
 
   /** Streaming materialized view: replay a static events frame through a
@@ -1268,13 +1121,12 @@ object EventStream {
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long, String, Double)]
     val streamDf = mem.toDF().toDF("event_id", "ts_us", "event_type", "value")
-    val ckpt = java.nio.file.Files.createTempDirectory("incr_ckpt").toString
     var state: Array[org.apache.spark.sql.Row] = Array.empty
     var stateSchema: org.apache.spark.sql.types.StructType = null
-    withReplayShuffle(spark) {
-      val q = streamDf.writeStream
+    Replay.run(spark, "incr", Replay.feed(mem, rows, batches),
+        Seq(replayShuffle())) {
+      streamDf.writeStream
         .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val batchState = graft.operators.Incremental.aggState(
             batch.select("event_type", "value"), Seq("event_type"), Seq("value"))
@@ -1293,14 +1145,6 @@ object EventStream {
           state = collected
           ()
         }
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
     }
     require(stateSchema != null, "no batches processed")
     spark.createDataFrame(java.util.Arrays.asList(state: _*), stateSchema)
@@ -1319,5 +1163,87 @@ object EventStream {
       .format("parquet")
       .option("path", outputDir)
       .start()
+  }
+}
+
+/** The one driver of graft's replay harnesses: a bounded static input,
+  * collected on the driver, fed back through MemoryStream micro-batches
+  * so the streaming STATE PATH (not just the batch plan) is what a gate
+  * checks. The driver owns the whole loop — the bounded collect, the
+  * chunking, the checkpoint, start, one drain per step, stop — and
+  * each replay passes in only its plan, its sink, its sentinel flush
+  * steps and its session-conf overrides. It shares this file with its
+  * main caller, so call-site job attribution (the first `graft.` frame's
+  * file) keeps naming the replay jobs `EventStream`'s. */
+private[graft] object Replay {
+
+  /** One replay step: put data on the source(s). The driver then drains
+    * it with one `processAllAvailable`. */
+  type Step = () => Unit
+
+  /** Collect a replay input with the [[EventStream.ReplayInputMaxRows]]
+    * guard: the LIMIT rides into the collect job itself (no extra
+    * counting pass), and one row past the cap proves the overflow. */
+  def collectBounded[T](ds: Dataset[T], helper: String, maxRows: Int): Array[T] = {
+    val cap = EventStream.ReplayInputMaxRows
+    require(maxRows >= 1 && maxRows <= cap,
+      s"$helper: maxRows=$maxRows out of [1, $cap]")
+    val arr = ds.limit(maxRows + 1).collect()
+    require(arr.length <= maxRows,
+      s"$helper: replay input exceeds maxRows=$maxRows rows. Replay " +
+        "harnesses materialize their bounded input on the driver to feed " +
+        "micro-batches (verification use); route large streams through " +
+        "the production entry point (a pure streaming plan) instead.")
+    arr
+  }
+
+  /** `rows` cut into `batches` near-equal chunks, then each `flush`
+    * chunk (the caller's sentinels, added even when empty), each added
+    * to `mem` as one step. */
+  def feed[T](mem: MemoryStream[T], rows: Seq[T], batches: Int,
+      flush: Seq[T]*): Seq[Step] = {
+    val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
+    (rows.grouped(chunk).toSeq ++ flush).map(c => () => { mem.addData(c); () })
+  }
+
+  /** Start `writer` with `conf` set on the session (restored after the
+    * stop), run each step followed by one `processAllAvailable`, then
+    * stop. Without a `checkpoint` the query runs on a fresh temp
+    * checkpoint that is deleted after the stop (the results live in the
+    * sink, not there); a caller that reads the state back passes its own
+    * directory and keeps it.
+    *
+    * The RocksDB store's background maintenance may still upload the
+    * final snapshot of a stopped query's stores after that delete
+    * (unloaded providers are queued for one last maintenance pass), so
+    * the directory is also registered for deletion at JVM exit. */
+  def run(spark: SparkSession, label: String, steps: Seq[Step],
+      conf: Seq[(String, String)] = Nil, checkpoint: Option[String] = None)(
+      writer: => DataStreamWriter[Row]): Unit = {
+    val ckpt = checkpoint.getOrElse(
+      java.nio.file.Files.createTempDirectory(s"${label}_ckpt").toString)
+    try withConf(spark, conf: _*) {
+      val q = writer.option("checkpointLocation", ckpt).start()
+      try steps.foreach { step => step(); q.processAllAvailable() }
+      finally q.stop()
+    } finally if (checkpoint.isEmpty) {
+      val p = new org.apache.hadoop.fs.Path(ckpt)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.deleteOnExit(p)
+      fs.delete(p, true)
+    }
+  }
+
+  /** [[run]] `out` into a uniquely named Append-mode memory sink;
+    * returns the sink's table. */
+  def toMemory(spark: SparkSession, label: String, steps: Seq[Step],
+      conf: Seq[(String, String)] = Nil, checkpoint: Option[String] = None)(
+      out: => DataFrame): DataFrame = {
+    val name = label + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    run(spark, label, steps, conf, checkpoint) {
+      out.writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append())
+    }
+    spark.table(name)
   }
 }

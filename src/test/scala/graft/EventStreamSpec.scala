@@ -394,6 +394,16 @@ class EventStreamSpec extends SparkSpec {
 
   test("sentinel-flushed replays restore the no-data-batch conf; x106 keeps its final sessions") {
     val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    // every conf a replay overrides, compared explicit-versus-unset: a
+    // replay must not leave a previously unset key explicitly set
+    val keys = Seq(key, "spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val explicitValues = Seq("true", "6",
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+      "false")
+    def explicit() = keys.map(spark.conf.getAll.get)
+    val original = explicit()
     val events = Seq(
       (1L, ts(0), 10L, "click", 1.0), (2L, ts(5), 10L, "purchase", 2.0),
       (3L, ts(50), 10L, "click", 3.0), (4L, ts(7), 11L, "click", 4.0))
@@ -406,15 +416,27 @@ class EventStreamSpec extends SparkSpec {
       "dedupeReplay" -> (() =>
         EventStream.dedupeReplay(spark, events, Seq("event_id"), batches = 2)),
       "attributionReplay" -> (() =>
-        EventStream.attributionReplay(spark, events, batches = 2)))
-    // the caller's setting comes back, whether it was the default or set
-    replays.zipWithIndex.foreach { case ((name, run), i) =>
-      if (i % 2 == 0) spark.conf.unset(key) else spark.conf.set(key, "true")
-      val before = spark.conf.get(key)
-      run()
-      assert(spark.conf.get(key) == before, s"$name left $key changed")
+        EventStream.attributionReplay(spark, events, batches = 2)),
+      "sessionizeReplay" -> (() =>
+        EventStream.sessionizeReplay(spark, events, batches = 2)),
+      "sessionizeTwsReplay" -> (() =>
+        EventStream.sessionizeTwsReplay(spark, events, batches = 2)))
+    // the caller's settings come back, whether they were unset or set
+    try replays.foreach { case (name, run) =>
+      Seq(false, true).foreach { set =>
+        keys.zip(explicitValues).foreach { case (k, v) =>
+          if (set) spark.conf.set(k, v) else spark.conf.unset(k)
+        }
+        val before = explicit()
+        run()
+        assert(explicit() == before, s"$name changed the explicit conf " +
+          s"(set = $set): ${keys.zip(explicit())} vs ${keys.zip(before)}")
+      }
+    } finally keys.zip(original).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    spark.conf.unset(key)
+    assert(explicit() == original)
     // x106's replay keeps no-data batches: every user's last session,
     // which only the final watermark advance closes, is still emitted
     val replayed = EventStream.sessionWindowsReplay(spark, events, batches = 2)
@@ -458,7 +480,17 @@ class EventStreamSpec extends SparkSpec {
       "enrichReplay" -> (() =>
         EventStream.enrichReplay(spark, events, dim, maxRows = 4)),
       "incrementalAggReplay" -> (() =>
-        EventStream.incrementalAggReplay(spark, events, maxRows = 4)))
+        EventStream.incrementalAggReplay(spark, events, maxRows = 4)),
+      "streamingIndexIngestReplay" -> (() =>
+        graft.operators.Retrieval.streamingIndexIngestReplay(spark,
+          events.select(col("event_id"), col("event_type").as("text")),
+          "event_id", "text", "graft_test_bound_ix", maxRows = 4)),
+      "streamingIvfIngestReplay" -> (() =>
+        graft.operators.Similarity.streamingIvfIngestReplay(spark,
+          events.select(col("event_id"), col("user_id").cast("int"),
+            array(col("value").cast("float")).as("vec")),
+          "event_id", "user_id", "vec", "graft_test_bound_ivf",
+          maxRows = 4)))
     attempts.foreach { case (name, run) =>
       val e = intercept[IllegalArgumentException](run())
       assert(e.getMessage.contains("maxRows"), s"$name: ${e.getMessage}")
@@ -469,5 +501,22 @@ class EventStreamSpec extends SparkSpec {
         maxRows = EventStream.ReplayInputMaxRows + 1)
     }
     assert(over.getMessage.contains("out of"))
+  }
+
+  test("memory-sink and index replays delete their checkpoints") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckpts() = tmp.listFiles().map(_.getName)
+      .filter(_.contains("_ckpt")).toSet
+    val before = ckpts()
+    val events = Seq((1L, ts(0), 10L, "click", 1.0),
+        (2L, ts(45), 10L, "click", 2.0), (3L, ts(7), 11L, "purchase", 3.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    assert(EventStream.sessionizeReplay(spark, events, batches = 2)
+      .count() == 3)
+    graft.operators.Retrieval.streamingIndexIngestReplay(spark,
+      Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
+      "doc_id", "text", "graft_test_ckpt_ix", buckets = 2, batches = 2)
+    assert(spark.table("graft_test_ckpt_ix_docs").count() == 2)
+    assert(ckpts() -- before == Set.empty[String])
   }
 }

@@ -291,6 +291,40 @@ class MaintenanceSpec extends SparkSpec {
     assert(served.count() > 0)
   }
 
+  test("IVF delete, rebalance and repair put partitionOverwriteMode back, " +
+    "whether it was unset or set") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    // cell 0 holds 9 of 12 vectors (past 2x the mean: splits), cell 2 one
+    // (below half the mean: merges), so every operator reaches its
+    // dynamic-overwrite block
+    val base = (0 until 12).map { i =>
+      (i.toLong, if (i < 9) 0 else if (i < 11) 1 else 2,
+        Seq(i / 10.0, (12 - i) / 10.0))
+    }.toDF("id", "cell", "vec")
+    val extra = Seq((100L, 1, Seq(0.5, 0.5))).toDF("id", "cell", "vec")
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "delete" -> (t => Similarity.deleteFromIvfIndex(spark,
+        Seq(3L).toDF("id"), "id", t, "cell", "vec")),
+      "rebalance" -> (t => Similarity.rebalanceIvfCells(spark, t, "id",
+        "cell", "vec")),
+      // a fully landed append looks like a crashed one to the repair,
+      // which takes the batch back out of the table and its codes
+      "repair" -> { t =>
+        Similarity.appendToIvfIndex(extra, "id", "cell", "vec", t)
+        Similarity.repairPartialIvfAppend(spark, extra.select("id"), "id",
+          t, "cell", "vec")
+      })
+    try for ((name, op) <- ops; prior <- Seq(None, Some("STATIC"))) {
+      val t = s"graft_test_conf_${name}_${prior.isDefined}"
+      Similarity.buildIvfIndex(base, "id", "cell", "vec", t)
+      Similarity.buildIvfCodes(spark, t, "id", "cell", "vec")
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      op(t)
+      assert(spark.conf.getAll.get(key) == prior,
+        s"$name left $key as ${spark.conf.getAll.get(key)}, was $prior")
+    } finally spark.conf.unset(key)
+  }
+
   private val hist = Seq(
     (1L, "a b c d e"),        // "a b c" also in doc 3 (within-history dup)
     (2L, "k l m n"),
