@@ -22,15 +22,8 @@ object Main {
     // reuse a live session (tests, notebooks); only stop what we created
     val preExisting =
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
     try args.headOption match {
       case Some("run") => runBatch(spark, parseFlags(args.tail))
       case Some("combine") => runCombine(spark, parseFlags(args.tail))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool behind the PLANS.md audit discipline: print the physical plan
@@ -13,7 +12,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * First arg = SF dir; an optional explain mode (`simple`, `formatted`,
   * `extended`, `codegen`, `cost`) follows; every remaining arg is a query
-  * name from [[graft.queries.Registry]].
+  * name from [[graft.queries.Registry]]. The session is the one Bench
+  * and Verify run on ([[GraftSession]], no SQL extensions), so the dump
+  * shows the plans they execute.
   */
 object PlanDump {
   private val Modes = Set("simple", "formatted", "extended", "codegen", "cost")
@@ -23,16 +24,7 @@ object PlanDump {
     val sfDir = args(0)
     val (mode, names) =
       if (Modes(args(1))) (args(1), args.drop(2)) else ("formatted", args.drop(1))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plandump")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("local[4]", "4")
     try names.foreach { n =>
       val df = queries.Registry.byName(n).run(spark, sfDir)
       println(s"==== $n ====")

@@ -1,112 +1,33 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable
-
 /** Dev-only empirical profiler (optimization guide §1/§7): run registry
   * queries under the bench session shape (local[32], shuffle.partitions=32)
-  * with a listener that aggregates per-stage task metrics, then print the
+  * with [[JobMeter]], which aggregates per-stage task metrics, then print the
   * top stages by executor time with shuffle read/write bytes and fetch
   * wait. This is the "which stage is the time going to" loop from the
   * guide, minus the UI (headless sandbox).
   *
   * {{{
-  *   tools/runprofile.sh /root/testdata/sf0.1 x55_pagerank x154_personalized_pagerank
+  *   tools/runmain.sh graft.Profile <sfDir> x55_pagerank x154_personalized_pagerank
   * }}}
   */
 object Profile {
-  private case class StageAgg(
-      var name: String = "",
-      var tasks: Int = 0,
-      var runTimeMs: Long = 0L,
-      var cpuTimeNs: Long = 0L,
-      var gcTimeMs: Long = 0L,
-      var shuffleReadB: Long = 0L,
-      var fetchWaitMs: Long = 0L,
-      var shuffleWriteB: Long = 0L,
-      var shuffleWriteTimeNs: Long = 0L,
-      var inputB: Long = 0L,
-      var outputB: Long = 0L,
-      var spillB: Long = 0L,
-      var deserMs: Long = 0L,
-      var resultSerMs: Long = 0L,
-      var wallMs: Long = 0L,
-      var submitted: Long = 0L,
-      var completed: Long = 0L)
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Profile <sfDir> <query>...")
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // same warmup as Bench
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().collect()
-
-    val stages = mutable.LinkedHashMap[Int, StageAgg]()
-    var nJobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        synchronized { nJobs += 1 }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        synchronized {
-          val a = stages.getOrElseUpdate(s.stageInfo.stageId, StageAgg())
-          a.name = s.stageInfo.name
-          a.submitted = System.currentTimeMillis()
-        }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        synchronized {
-          val a = stages.getOrElseUpdate(s.stageInfo.stageId, StageAgg())
-          a.name = s.stageInfo.name
-          a.completed = System.currentTimeMillis()
-          if (a.submitted > 0) a.wallMs = a.completed - a.submitted
-        }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-        val m = t.taskMetrics
-        if (m != null) {
-          val a = stages.getOrElseUpdate(t.stageId, StageAgg())
-          a.tasks += 1
-          a.runTimeMs += m.executorRunTime
-          a.cpuTimeNs += m.executorCpuTime
-          a.gcTimeMs += m.jvmGCTime
-          a.shuffleReadB += m.shuffleReadMetrics.totalBytesRead
-          a.fetchWaitMs += m.shuffleReadMetrics.fetchWaitTime
-          a.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
-          a.shuffleWriteTimeNs += m.shuffleWriteMetrics.writeTime
-          a.inputB += m.inputMetrics.bytesRead
-          a.outputB += m.outputMetrics.bytesWritten
-          a.spillB += m.diskBytesSpilled
-          a.deserMs += m.executorDeserializeTime
-          a.resultSerMs += m.resultSerializationTime
-        }
-      }
-    }
+    val spark = GraftSession.local(defaultCpus = "32")
+    GraftSession.warmUp(spark, sfDir)
 
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"
     names.foreach { n =>
-      stages.clear(); nJobs = 0
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      queries.Registry.byName(n).run(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // let the listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
+      val (_, m) = JobMeter(spark) {
+        queries.Registry.byName(n).run(spark, sfDir).count() }
       queries.PhaseTimer.drain(n)
-      val snap = stages.toSeq
+      val snap = m.stages
       val totRun = snap.map(_._2.runTimeMs).sum
       val totWall = snap.map(_._2.wallMs).sum
-      println(f"==== $n: wall=$dt%.2fs jobs=$nJobs stages=${snap.size} " +
+      println(f"==== $n: wall=${m.wallS}%.2fs jobs=${m.jobs} stages=${snap.size} " +
         f"taskTime=${totRun / 1000.0}%.1fs stageWallSum=${totWall / 1000.0}%.1fs ====")
       snap.sortBy(-_._2.wallMs).take(25).foreach { case (id, a) =>
         println(f"  st$id%-5d wall=${a.wallMs / 1000.0}%6.2fs run=${a.runTimeMs / 1000.0}%7.2fs " +

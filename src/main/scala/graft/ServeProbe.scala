@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only serve-path profiler (optimization guide §1): decompose the
@@ -11,38 +9,19 @@ import org.apache.spark.sql.functions._
   * wall at sf0.1 is dominated by fixed per-job driver cost, so jobs ARE
   * the unit of optimization, not task time).
   *
-  * {{{ tools/runserveprobe.sh /root/testdata/sf0.1 x278 }}}
+  * {{{ tools/runmain.sh graft.ServeProbe <sfDir> x278 }}}
   */
 object ServeProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ServeProbe <sfDir> <x278|x284|x286>")
     val sfDir = args(0)
     val which = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count().collect()
+    val spark = GraftSession.local(defaultCpus = "32")
+    GraftSession.warmUp(spark, sfDir)
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
     def step(name: String)(f: => Unit): Unit = {
-      Thread.sleep(300)
-      val j0 = jobs.get()
-      val t0 = System.nanoTime()
-      f
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"STEP $name%-28s ${dt}%7.2fs jobs=${jobs.get() - j0}")
+      val (_, m) = JobMeter(spark)(f)
+      println(f"STEP $name%-28s ${m.wallS}%7.2fs jobs=${m.jobs}")
     }
 
     val d = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -48,33 +48,34 @@ private[graft] object IngestLedger {
     * the first unrecorded batch after a (re)start runs the family's
     * `repair` before its `append`; every applied batch is recorded.
     * Without a durable `checkpointDir` the stream runs on a fresh temp
-    * checkpoint named after `label`. */
+    * checkpoint named after `label`, deleted once the stream ends
+    * ([[graft.streaming.Replay.withCheckpoint]]). */
   def ingestFeed(spark: org.apache.spark.sql.SparkSession, feedDir: String,
       schema: org.apache.spark.sql.types.StructType,
       checkpointDir: Option[String], label: String)(
       repair: DataFrame => Unit, append: DataFrame => Unit): Unit = {
     import org.apache.spark.sql.streaming.Trigger
-    val ckpt = checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory(s"${label}_ckpt").toString)
-    // only the FIRST unrecorded batch after a (re)start can be a replay
-    // of a crashed attempt; batches after it committed synchronously
-    @volatile var mayHaveOrphans = true
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s2 = batch.sparkSession
-        if (!appliedBatchIds(s2, ckpt).contains(batchId)) {
-          if (mayHaveOrphans) repair(batch)
-          append(batch)
-          recordAppliedBatch(s2, ckpt, batchId)
+    graft.streaming.Replay.withCheckpoint(spark, label, checkpointDir) { ckpt =>
+      // only the FIRST unrecorded batch after a (re)start can be a replay
+      // of a crashed attempt; batches after it committed synchronously
+      @volatile var mayHaveOrphans = true
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(feedDir)
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val s2 = batch.sparkSession
+          if (!appliedBatchIds(s2, ckpt).contains(batchId)) {
+            if (mayHaveOrphans) repair(batch)
+            append(batch)
+            recordAppliedBatch(s2, ckpt, batchId)
+          }
+          mayHaveOrphans = false
         }
-        mayHaveOrphans = false
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
   }
 
   def appliedBatchIds(spark: org.apache.spark.sql.SparkSession,

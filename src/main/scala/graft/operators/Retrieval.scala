@@ -529,16 +529,6 @@ object Retrieval {
     * Cost: one batch scan + one batch-sized bucketed write + a
     * vocabulary-sized merge. The corpus-sized postings table is read by
     * NOTHING in this path. */
-  // Dev-only ingest step timer (r15), env-guarded: set
-  // GRAFT_INGEST_TIMING=1 to print per-step walls of the append path —
-  // the measurement loop behind the r15 ingest rework; zero cost unset
-  @inline private def tstep[T](name: String)(body: => T): T = {
-    if (sys.env.contains("GRAFT_INGEST_TIMING")) {
-      val t0 = System.nanoTime(); val r = body
-      println(f"[ingest] $name ${(System.nanoTime() - t0) / 1e9}%.3f"); r
-    } else body
-  }
-
   def appendToPostingsIndex(newDocs: DataFrame, idCol: String,
       textCol: String, table: String, buckets: Int = 8): Unit = {
     val spark = newDocs.sparkSession
@@ -546,7 +536,8 @@ object Retrieval {
     // number, a crash after the batch write but before the bump could
     // hand a later batch the same generation and let one tombstone
     // cutoff kill both
-    val newGen = tstep("gen") { val g = currentGen(spark, table) + 1; setGen(spark, table, g); g }
+    val newGen = currentGen(spark, table) + 1
+    setGen(spark, table, newGen)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the compact postings frame feeds the bucketed append, the
     // vocabulary/bounds/champion merges; the tiny lengths frame feeds
@@ -561,10 +552,10 @@ object Retrieval {
       // file instead of every task spraying up-to-n files (r15, guide
       // §6 file sizing: a k-batch ingest was leaving k·partitions·n tiny
       // files for the serve scans to open)
-      tstep("postings") { tf.select("token", "doc", "tf", "dl", "gen")
+      tf.select("token", "doc", "tf", "dl", "gen")
         .repartition(buckets, col("token"))
         .write.mode("append").format("parquet")
-        .bucketBy(buckets, "token").sortBy("token").saveAsTable(table) }
+        .bucketBy(buckets, "token").sortBy("token").saveAsTable(table)
       // companion updates: mutually INDEPENDENT table swaps fed by the
       // persisted tf/dls frames, overlapped on the shared [[Par]] pool
       // (guide §2.6 — serially, each paid its own ~0.1–0.7 s of fixed
@@ -635,14 +626,14 @@ object Retrieval {
           .bucketBy(buckets, "token").sortBy("token")
           .saveAsTable(s"${table}_pos")
       }
-      tstep("companions") { Par.all(lanes.result()) }
+      Par.all(lanes.result())
       // champion lists refresh INCREMENTALLY at the post-append stats
       // (bounded by |vocab|·(topN + batch postings) — see
       // [[refreshChampions]]); without this the bounded serving table
       // would silently freeze at pre-append idf and miss every new doc
       if (spark.catalog.tableExists(s"${table}_champ"))
-        tstep("champ") { refreshChampions(spark, table,
-          tf.select("token", "doc", "tf", "dl", "gen")) }
+        refreshChampions(spark, table,
+          tf.select("token", "doc", "tf", "dl", "gen"))
     } finally { tf.unpersist(); dls.unpersist() }
   }
 

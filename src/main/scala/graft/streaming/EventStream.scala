@@ -1208,25 +1208,33 @@ private[graft] object Replay {
 
   /** Start `writer` with `conf` set on the session (restored after the
     * stop), run each step followed by one `processAllAvailable`, then
-    * stop. Without a `checkpoint` the query runs on a fresh temp
-    * checkpoint that is deleted after the stop (the results live in the
-    * sink, not there); a caller that reads the state back passes its own
-    * directory and keeps it.
+    * stop, on [[withCheckpoint]]'s directory (the results live in the
+    * sink; a caller that reads the state back passes its own directory
+    * and keeps it). */
+  def run(spark: SparkSession, label: String, steps: Seq[Step],
+      conf: Seq[(String, String)] = Nil, checkpoint: Option[String] = None)(
+      writer: => DataStreamWriter[Row]): Unit =
+    withCheckpoint(spark, label, checkpoint) { ckpt =>
+      withConf(spark, conf: _*) {
+        val q = writer.option("checkpointLocation", ckpt).start()
+        try steps.foreach { step => step(); q.processAllAvailable() }
+        finally q.stop()
+      }
+    }
+
+  /** `body` on the caller's durable `checkpoint`, left as it is; without
+    * one, on a fresh temp checkpoint named after `label` that is deleted
+    * when `body` returns or throws.
     *
     * The RocksDB store's background maintenance may still upload the
     * final snapshot of a stopped query's stores after that delete
     * (unloaded providers are queued for one last maintenance pass), so
     * the directory is also registered for deletion at JVM exit. */
-  def run(spark: SparkSession, label: String, steps: Seq[Step],
-      conf: Seq[(String, String)] = Nil, checkpoint: Option[String] = None)(
-      writer: => DataStreamWriter[Row]): Unit = {
+  def withCheckpoint[T](spark: SparkSession, label: String,
+      checkpoint: Option[String])(body: String => T): T = {
     val ckpt = checkpoint.getOrElse(
       java.nio.file.Files.createTempDirectory(s"${label}_ckpt").toString)
-    try withConf(spark, conf: _*) {
-      val q = writer.option("checkpointLocation", ckpt).start()
-      try steps.foreach { step => step(); q.processAllAvailable() }
-      finally q.stop()
-    } finally if (checkpoint.isEmpty) {
+    try body(ckpt) finally if (checkpoint.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(ckpt)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.deleteOnExit(p)

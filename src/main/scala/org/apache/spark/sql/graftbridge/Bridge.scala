@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Column ⇄ catalyst Expression bridge. Spark 4 made `ExpressionUtils`
   * `private[sql]`, so third-party native expressions need this one-liner in
   * an `org.apache.spark.sql` subpackage — the same pattern every OSS Spark
-  * extension library uses. Nothing else lives in this namespace. */
+  * extension library uses. Nothing else lives in this namespace; it also
+  * reaches the `private[spark]` listener bus. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -20,4 +21,9 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Block until every event posted so far has reached its listeners
+    * (SparkListeners and QueryExecutionListeners alike). */
+  def flushListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -513,10 +513,23 @@ class EventStreamSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value")
     assert(EventStream.sessionizeReplay(spark, events, batches = 2)
       .count() == 3)
-    graft.operators.Retrieval.streamingIndexIngestReplay(spark,
-      Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+    graft.operators.Retrieval.streamingIndexIngestReplay(spark, docs,
       "doc_id", "text", "graft_test_ckpt_ix", buckets = 2, batches = 2)
     assert(spark.table("graft_test_ckpt_ix_docs").count() == 2)
+    // the file-stream ingests, called without a durable checkpointDir
+    val feed = java.nio.file.Files.createTempDirectory("ckpt_feed").toString
+    docs.write.mode("overwrite").parquet(s"$feed/docs")
+    graft.operators.Retrieval.fileStreamIndexIngest(spark, s"$feed/docs",
+      "doc_id", "text", "graft_test_ckpt_fix", buckets = 2)
+    assert(spark.table("graft_test_ckpt_fix_docs").count() == 2)
+    Seq((1L, "a", Seq(0.1, 0.2)), (2L, "b", Seq(0.3, 0.4)))
+      .toDF("vec_id", "label", "embedding")
+      .write.mode("overwrite").parquet(s"$feed/vecs")
+    graft.operators.Similarity.fileStreamIvfIngest(spark, s"$feed/vecs",
+      "vec_id", "label", "embedding", "graft_test_ckpt_fivf")
+    assert(spark.table("graft_test_ckpt_fivf").count() == 2)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(feed))
     assert(ckpts() -- before == Set.empty[String])
   }
 }

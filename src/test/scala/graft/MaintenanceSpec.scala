@@ -80,39 +80,26 @@ class MaintenanceSpec extends SparkSpec {
   test("ivfTopKQuantized: plan construction costs ZERO jobs;" +
       " a multi-row query frame fails loudly in-plan") {
     freshIvf("graft_test_guard")
-    // let the async listener bus drain the build's events so they can't
-    // bleed into the counter registered next
-    Thread.sleep(1500)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val q1 = vecs(Seq((100L, "q", Seq(0.9, 0.9)))).select("vec")
-      val served = Similarity.ivfTopKQuantized(spark, "graft_test_guard",
+    val q1 = vecs(Seq((100L, "q", Seq(0.9, 0.9)))).select("vec")
+    val (served, meter) = JobMeter(spark) {
+      Similarity.ivfTopKQuantized(spark, "graft_test_guard",
         "id", "cell", "vec", q1, k = 1, nprobe = 1, rescore = 1)
-      // listener events are async — let the bus drain
-      Thread.sleep(1500)
-      // ZERO call-time jobs: the 1-row _cmeta levels read rides the
-      // serving plan as a broadcast cross join (r16 — it was an eager
-      // head() job per serve; the r13 guard ran a SECOND job on top)
-      assert(jobs.get() == 0,
-        s"expected 0 call-time jobs, saw ${jobs.get()}")
-      assert(served.collect().length == 1)
-      // multi-row frame: the in-plan raise_error fires at serve time
-      val q2 = vecs(Seq((100L, "q", Seq(0.9, 0.9)),
-        (101L, "q", Seq(0.1, 0.1)))).select("vec")
-      val bad = Similarity.ivfTopKQuantized(spark, "graft_test_guard",
-        "id", "cell", "vec", q2, k = 1, nprobe = 1, rescore = 1)
-      val e = intercept[Exception] { bad.collect() }
-      def chain(t: Throwable): Seq[String] =
-        if (t == null) Seq() else Option(t.getMessage).toSeq ++ chain(t.getCause)
-      assert(chain(e).exists(_.contains("exactly one query row")),
-        s"unexpected error: ${chain(e).mkString(" | ")}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // ZERO call-time jobs: the 1-row _cmeta levels read rides the
+    // serving plan as a broadcast cross join (r16 — it was an eager
+    // head() job per serve; the r13 guard ran a SECOND job on top)
+    assert(meter.jobs == 0, s"expected 0 call-time jobs, saw ${meter.jobs}")
+    assert(served.collect().length == 1)
+    // multi-row frame: the in-plan raise_error fires at serve time
+    val q2 = vecs(Seq((100L, "q", Seq(0.9, 0.9)),
+      (101L, "q", Seq(0.1, 0.1)))).select("vec")
+    val bad = Similarity.ivfTopKQuantized(spark, "graft_test_guard",
+      "id", "cell", "vec", q2, k = 1, nprobe = 1, rescore = 1)
+    val e = intercept[Exception] { bad.collect() }
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Seq() else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    assert(chain(e).exists(_.contains("exactly one query row")),
+      s"unexpected error: ${chain(e).mkString(" | ")}")
   }
 
   test("maintainIvfCells: skew_bps equal to the threshold does NOT " +

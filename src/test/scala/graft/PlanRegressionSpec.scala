@@ -807,41 +807,29 @@ class PlanRegressionSpec extends SparkSpec {
     // |keys|-proportional buffers; build + probe stay in-plan/native.
     import spark.implicits._
     import graft.operators.BloomPrune
-    // let the async listener bus drain earlier suites' events
-    Thread.sleep(1500)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val large = (1L to 500L).map(k => (k % 50, k)).toDF("k", "v")
-      val small = Seq((1L, "a"), (2L, "b")).toDF("k", "tag")
-      val pruned = BloomPrune.pruneLarge(large, small, "k")
-      Thread.sleep(1500)
-      // AQE materializes a count as up to two jobs (stage + result);
-      // anything beyond that means an eager filter build leaked back in
-      assert(jobs.get() >= 1 && jobs.get() <= 2,
-        s"pruneLarge ran ${jobs.get()} call-time jobs (want 1-2 — the " +
-          "sizing count only; the filter build must ride the consuming " +
-          "action)")
-      val p = pruned.queryExecution
-        .explainString(ExplainMode.fromString("formatted"))
-      assert(p.contains("might_contain"), "native probe missing:\n" +
-        p.take(600))
-      assert(p.contains("bloom_filter_agg"),
-        "in-plan filter build missing:\n" + p.take(600))
-      // the aggregate's estimated-items literal is the EXACT build-side
-      // key count (2), not a fixed default: bloom_filter_agg(hash, est, bits)
-      assert("bloom_filter_agg\\(xxhash64\\([^)]*\\), 2, 64".r
-          .findFirstIn(p).isDefined,
-        "filter not sized to the build-side count (want estItems=2):\n" +
-          "bloom_filter_agg\\([^\\n]*".r.findFirstIn(p).getOrElse("") +
-          "\n" + p.take(600))
-      assert(!p.contains("UDF"), "probe regressed to a scala UDF")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val large = (1L to 500L).map(k => (k % 50, k)).toDF("k", "v")
+    val small = Seq((1L, "a"), (2L, "b")).toDF("k", "tag")
+    val (pruned, meter) = JobMeter(spark)(BloomPrune.pruneLarge(large, small, "k"))
+    // AQE materializes a count as up to two jobs (stage + result);
+    // anything beyond that means an eager filter build leaked back in
+    assert(meter.jobs >= 1 && meter.jobs <= 2,
+      s"pruneLarge ran ${meter.jobs} call-time jobs (want 1-2 — the " +
+        "sizing count only; the filter build must ride the consuming " +
+        "action)")
+    val p = pruned.queryExecution
+      .explainString(ExplainMode.fromString("formatted"))
+    assert(p.contains("might_contain"), "native probe missing:\n" +
+      p.take(600))
+    assert(p.contains("bloom_filter_agg"),
+      "in-plan filter build missing:\n" + p.take(600))
+    // the aggregate's estimated-items literal is the EXACT build-side
+    // key count (2), not a fixed default: bloom_filter_agg(hash, est, bits)
+    assert("bloom_filter_agg\\(xxhash64\\([^)]*\\), 2, 64".r
+        .findFirstIn(p).isDefined,
+      "filter not sized to the build-side count (want estItems=2):\n" +
+        "bloom_filter_agg\\([^\\n]*".r.findFirstIn(p).getOrElse("") +
+        "\n" + p.take(600))
+    assert(!p.contains("UDF"), "probe regressed to a scala UDF")
   }
 
   test("x288/x289 incremental-dedup history contract: the key table is " +
@@ -862,7 +850,6 @@ class PlanRegressionSpec extends SparkSpec {
     // that re-windows history, reads the table twice, or floats the
     // probe above the aggregate fails here.
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Filter => LFilter, Project => LProject}
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     import graft.operators.Dedup
@@ -870,105 +857,92 @@ class PlanRegressionSpec extends SparkSpec {
     Dedup.buildSubstringKeys(
       Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text"),
       "doc_id", "text", l = 3, tbl)
-    val captured = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.execution.QueryExecution]())
-    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = captured.add(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(ql)
-    try {
-      // batch carries BOTH removal classes — "a b c" hits history,
-      // "f x y" repeats within the batch — so neither union branch is
-      // empty and AQE's empty-relation propagation cannot collapse the
-      // plan (an empty branch would hide a second key-table scan)
+    // batch carries BOTH removal classes — "a b c" hits history,
+    // "f x y" repeats within the batch — so neither union branch is
+    // empty and AQE's empty-relation propagation cannot collapse the
+    // plan (an empty branch would hide a second key-table scan)
+    val (_, meter) = JobMeter(spark) {
       Dedup.incrementalSubstringDedupIndexed(spark, tbl,
           Seq((10L, "a b c f x y f x y")).toDF("doc_id", "text"),
           "doc_id", "text", l = 3)
         .collect()
-      // the execution listener bus is async — let it drain
-      Thread.sleep(2000)
-      def lAll(p: LogicalPlan): Seq[LogicalPlan] =
-        p +: p.children.flatMap(lAll)
-      def keyRels(p: LogicalPlan): Seq[LogicalRelation] = lAll(p).collect {
-        case r: LogicalRelation
-            if r.catalogTable.exists(_.identifier.table == tbl) => r
+    }
+    def lAll(p: LogicalPlan): Seq[LogicalPlan] =
+      p +: p.children.flatMap(lAll)
+    def keyRels(p: LogicalPlan): Seq[LogicalRelation] = lAll(p).collect {
+      case r: LogicalRelation
+          if r.catalogTable.exists(_.identifier.table == tbl) => r
+    }
+    val qes = meter.executions
+    assert(qes.nonEmpty, "listener captured no executions")
+    val keyQes = qes.filter(qe => keyRels(qe.optimizedPlan).nonEmpty)
+    assert(keyQes.length == 1,
+      s"key table touched by ${keyQes.length} jobs (want exactly 1); " +
+        s"captured ${qes.length} executions")
+    val qe = keyQes.head
+    // the removal-set plan references histHits TWICE (the history-hit
+    // semi-join and the batch-dup anti-join), so the key relation may
+    // appear twice LOGICALLY — every appearance must carry the Bloom
+    // probe (the in-plan might_contain filter, fed by the 1-row
+    // broadcast filter aggregate) BELOW the first Aggregate on its
+    // ancestor path: map-side filtering, nothing key-table-sized ever
+    // shuffles. Between the relation and the probe only Project and
+    // the 1-row-filter cross join may appear.
+    val rels = keyRels(qe.optimizedPlan)
+    assert(rels.nonEmpty && rels.length <= 2,
+      s"key-table reads in the job = ${rels.length}")
+    for (rel <- rels) {
+      def lPath(p: LogicalPlan): Option[List[LogicalPlan]] =
+        if (p eq rel) Some(List(p))
+        else p.children.view.flatMap(lPath).headOption.map(p :: _)
+      val up = lPath(qe.optimizedPlan)
+        .getOrElse(fail("relation unreachable")).reverse.drop(1)
+      val probeIdx = up.indexWhere {
+        case f: LFilter => f.condition.toString.contains("might_contain")
+        case _ => false
       }
-      val qes = captured.asScala.toList
-      assert(qes.nonEmpty, "listener captured no executions")
-      val keyQes = qes.filter(qe => keyRels(qe.optimizedPlan).nonEmpty)
-      assert(keyQes.length == 1,
-        s"key table touched by ${keyQes.length} jobs (want exactly 1); " +
-          s"captured ${qes.length} executions")
-      val qe = keyQes.head
-      // the removal-set plan references histHits TWICE (the history-hit
-      // semi-join and the batch-dup anti-join), so the key relation may
-      // appear twice LOGICALLY — every appearance must carry the Bloom
-      // probe (the in-plan might_contain filter, fed by the 1-row
-      // broadcast filter aggregate) BELOW the first Aggregate on its
-      // ancestor path: map-side filtering, nothing key-table-sized ever
-      // shuffles. Between the relation and the probe only Project and
-      // the 1-row-filter cross join may appear.
-      val rels = keyRels(qe.optimizedPlan)
-      assert(rels.nonEmpty && rels.length <= 2,
-        s"key-table reads in the job = ${rels.length}")
-      for (rel <- rels) {
-        def lPath(p: LogicalPlan): Option[List[LogicalPlan]] =
-          if (p eq rel) Some(List(p))
-          else p.children.view.flatMap(lPath).headOption.map(p :: _)
-        val up = lPath(qe.optimizedPlan)
-          .getOrElse(fail("relation unreachable")).reverse.drop(1)
-        val probeIdx = up.indexWhere {
-          case f: LFilter => f.condition.toString.contains("might_contain")
-          case _ => false
-        }
-        val aggIdx = up.indexWhere(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate])
-        assert(probeIdx >= 0,
-          "Bloom-probe might_contain filter missing above the key " +
-            s"relation: ${up.map(_.nodeName).mkString(" <- ")}")
-        assert(aggIdx < 0 || probeIdx < aggIdx,
-          s"Bloom probe (pos $probeIdx) floated above the ledger " +
-            s"aggregate (pos $aggIdx): " +
-            up.map(_.nodeName).mkString(" <- "))
-        // nothing heavier than Project / the 1-row cross join sits
-        // between the scan and the probe
-        for (n <- up.take(probeIdx)) n match {
-          case _: LProject => ()
-          case _: org.apache.spark.sql.catalyst.plans.logical.Join => ()
-          case other => fail(s"unexpected ${other.nodeName} between the " +
-            "key scan and its Bloom probe")
-        }
+      val aggIdx = up.indexWhere(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate])
+      assert(probeIdx >= 0,
+        "Bloom-probe might_contain filter missing above the key " +
+          s"relation: ${up.map(_.nodeName).mkString(" <- ")}")
+      assert(aggIdx < 0 || probeIdx < aggIdx,
+        s"Bloom probe (pos $probeIdx) floated above the ledger " +
+          s"aggregate (pos $aggIdx): " +
+          up.map(_.nodeName).mkString(" <- "))
+      // nothing heavier than Project / the 1-row cross join sits
+      // between the scan and the probe
+      for (n <- up.take(probeIdx)) n match {
+        case _: LProject => ()
+        case _: org.apache.spark.sql.catalyst.plans.logical.Join => ()
+        case other => fail(s"unexpected ${other.nodeName} between the " +
+          "key scan and its Bloom probe")
       }
-      // PHYSICALLY the table is scanned once: the second logical
-      // reference resolves to a ReusedExchange over the first scan's
-      // Bloom-filtered partial aggregate (AQE exchange reuse — verified
-      // in the final adaptive plan). Walk the executed plan, descending
-      // into query stages but not into reuse nodes, and count FileScans
-      // of the key table.
-      import org.apache.spark.sql.execution.{SparkPlan, FileSourceScanExec}
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-      val seenStages = scala.collection.mutable.Set[Int]()
-      def phys(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => p +: phys(a.executedPlan)
-        case q: QueryStageExec =>
-          if (seenStages.add(q.id)) p +: phys(q.plan) else Seq(p)
-        case _: ReusedExchangeExec => Seq(p)
-        case _ => p +: p.children.flatMap(phys)
-      }
-      val physScans = phys(qe.executedPlan).collect {
-        case f: FileSourceScanExec
-            if f.tableIdentifier.exists(_.table == tbl) => f
-      }
-      assert(physScans.length == 1,
-        s"physical key-table scans = ${physScans.length} (want 1 — " +
-          "exchange reuse lost?)")
-    } finally spark.listenerManager.unregister(ql)
+    }
+    // PHYSICALLY the table is scanned once: the second logical
+    // reference resolves to a ReusedExchange over the first scan's
+    // Bloom-filtered partial aggregate (AQE exchange reuse — verified
+    // in the final adaptive plan). Walk the executed plan, descending
+    // into query stages but not into reuse nodes, and count FileScans
+    // of the key table.
+    import org.apache.spark.sql.execution.{SparkPlan, FileSourceScanExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val seenStages = scala.collection.mutable.Set[Int]()
+    def phys(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => p +: phys(a.executedPlan)
+      case q: QueryStageExec =>
+        if (seenStages.add(q.id)) p +: phys(q.plan) else Seq(p)
+      case _: ReusedExchangeExec => Seq(p)
+      case _ => p +: p.children.flatMap(phys)
+    }
+    val physScans = phys(qe.executedPlan).collect {
+      case f: FileSourceScanExec
+          if f.tableIdentifier.exists(_.table == tbl) => f
+    }
+    assert(physScans.length == 1,
+      s"physical key-table scans = ${physScans.length} (want 1 — " +
+        "exchange reuse lost?)")
   }
 
   test("ksTest/mannWhitney/gini never funnel a value-keyed frame through " +

@@ -28,12 +28,17 @@ class SourceGuardSpec extends AnyFunSuite {
     }
   }
 
+  private def hits(pattern: String): Seq[(String, Int, String)] = {
+    val re = pattern.r
+    codeLines.filter { case (_, _, l) => re.findFirstIn(l).isDefined }
+  }
+
+  private def show(hs: Seq[(String, Int, String)]): String =
+    hs.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n")
+
   /** `pattern` occurs in code exactly `count` times, all in `owner`. */
   private def assertOnlyIn(pattern: String, owner: String, count: Int): Unit = {
-    val re = pattern.r
-    val hits = codeLines.filter { case (_, _, l) => re.findFirstIn(l).isDefined }
-    def show(hs: Seq[(String, Int, String)]) =
-      hs.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n")
+    val hits = this.hits(pattern)
     val strays = hits.filter(_._1 != owner)
     assert(strays.isEmpty, s"`$pattern` outside $owner:\n" + show(strays))
     assert(hits.length == count,
@@ -53,5 +58,25 @@ class SourceGuardSpec extends AnyFunSuite {
   test("the ingest ledger is read only by its exactly-once shell") {
     // the definition and IngestLedger.ingestFeed's one call
     assertOnlyIn("appliedBatchIds", "graft/operators/IngestLedger.scala", 2)
+  }
+
+  test("sessions are built only by GraftSession") {
+    assertOnlyIn("""SparkSession\.builder""", "graft/GraftSession.scala", 1)
+  }
+
+  test("listeners are attached only by JobMeter, and nothing sleeps") {
+    // JobMeter.apply's one attach; waits go through the bus flush
+    assertOnlyIn("addSparkListener", "graft/JobMeter.scala", 1)
+    val sleeps = hits("""Thread\.sleep""")
+    assert(sleeps.isEmpty, "`Thread.sleep` in src/main:\n" + show(sleeps))
+  }
+
+  test("the library packages read no environment variables") {
+    val libs = Seq("operators", "functions", "plans", "sources", "streaming",
+      "queries").map(p => s"graft/$p/")
+    val reads = hits("""sys\.env|System\.getenv""")
+      .filter(h => libs.exists(h._1.startsWith))
+    assert(reads.isEmpty, "environment read in a library package:\n" +
+      show(reads))
   }
 }

@@ -23,22 +23,4 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-
-  /** `body`'s result and the number of Spark jobs it launched, counted by a
-    * listener between two drains of the listener bus. */
-  def jobsOf[T](spark: SparkSession)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.flush(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.GraftTestBus.flush(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 }

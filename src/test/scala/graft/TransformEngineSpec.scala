@@ -156,21 +156,21 @@ class TransformEngineSpec extends SparkSpec {
         Template(sourceType = "csv"), false, 1L))
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     files.foreach { case (f, t, archived, rowsOut) =>
-      val (r, jobs) = SparkSpec.jobsOf(spark) {
+      val (r, meter) = JobMeter(spark) {
         Pipeline.runPipeline(spark, f, t, dir.resolve(s"${f.getFileName}.parquet"),
           dir.resolve("archive"), dir.resolve("quarantine"))
       }
       assert(r.success == archived && r.rowCount == rowsOut, s"$f: ${r.message}")
-      assert(jobs == 1, s"$f: $jobs jobs")
+      assert(meter.jobs == 1, s"$f: ${meter.jobs} jobs")
     }
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
 
     val (_, m) = TransformEngine.transform(
       TemplateReader.read(spark, dir.resolve("archive/plain.csv"), Template(sourceType = "csv")),
       Template(providerName = Some("p")))
-    val (metrics, jobs) = SparkSpec.jobsOf(spark)(m.compute())
+    val (metrics, meter) = JobMeter(spark)(m.compute())
     assert(metrics("unpivot_before") == ((3L, 3)))
-    assert(jobs == 1, s"compute(): $jobs jobs")
+    assert(meter.jobs == 1, s"compute(): ${meter.jobs} jobs")
   }
 
   test("filter_and_rename positional header mode takes first N columns") {

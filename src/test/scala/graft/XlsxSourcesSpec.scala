@@ -250,8 +250,8 @@ class XlsxSourcesSpec extends SparkSpec {
       val p = tmp.resolve("h.csv")
       Files.write(p, bytes)
       val inferred = csvReader(t).option("header", "true").csv(p.toString)
-      val (df, jobs) = SparkSpec.jobsOf(spark)(TemplateReader.readCsv(spark, p, t))
-      assert(jobs == 0, s"$name: the read launched $jobs jobs")
+      val (df, meter) = JobMeter(spark)(TemplateReader.readCsv(spark, p, t))
+      assert(meter.jobs == 0, s"$name: the read launched ${meter.jobs} jobs")
       assert(df.columns.toSeq == inferred.columns.toSeq, name)
       assert(df.collect().toSeq == inferred.collect().toSeq, name)
     }
@@ -296,8 +296,8 @@ class XlsxSourcesSpec extends SparkSpec {
       val p = tmp.resolve("r.csv")
       Files.writeString(p, text)
       val (names, rows) = replay(p, t)
-      val (df, jobs) = SparkSpec.jobsOf(spark)(TemplateReader.readCsv(spark, p, t))
-      assert(jobs == 0, text)
+      val (df, meter) = JobMeter(spark)(TemplateReader.readCsv(spark, p, t))
+      assert(meter.jobs == 0, text)
       assert(df.columns.toSeq == names, text)
       assert(df.collect().toSeq == rows, text)
     }

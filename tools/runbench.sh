@@ -1,18 +1,9 @@
 #!/bin/bash
 # Dev-only: run graft.Bench directly on compiled classes (no sbt overhead).
 # Usage: tools/runbench.sh <sfDir> <outFile> [memGB]
+# GRAFT_BENCH_CLASSES overrides the classes dir (see tools/runmain.sh).
 set -e
-REPO=/root/repo
 SF="$1"; OUT="$2"; MEM="${3:-48}"
-AO=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  AO="$AO --add-opens java.base/$p=ALL-UNNAMED"
-done
-# GRAFT_BENCH_CLASSES overrides the classes dir (point long bench chains
-# at a snapshot so recompiles can't corrupt a lazily-loading run)
-CLASSES="${GRAFT_BENCH_CLASSES:-$REPO/target/scala-2.13/classes}"
-SPARK_GRAFT_SF_DIR="$SF" java -Xmx${MEM}g $AO \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" \
-  graft.Bench > "$OUT" 2>"$OUT.err"
+SPARK_GRAFT_SF_DIR="$SF" SPARK_DRIVER_MEM="${MEM}g" \
+  "$(dirname "$0")/runmain.sh" graft.Bench > "$OUT" 2>"$OUT.err"
 grep -c '"metric"' "$OUT" >/dev/null && echo "done: $OUT"

@@ -15,26 +15,16 @@ ONLY = set(sys.argv[2:])
 OUT = "/tmp/graft_verify"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-ADD_OPENS = []
-for p in ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-          "java.net", "java.nio", "java.util", "java.util.concurrent",
-          "java.util.concurrent.atomic"]:
-    ADD_OPENS += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-for p in ["sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar"]:
-    ADD_OPENS += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-
 def run_verify():
     # GRAFT_VERIFY_CLASSES: point a long-running verify at a class
     # SNAPSHOT so concurrent recompiles can't corrupt lazy class loading
-    # (same idiom as runbench.sh's GRAFT_BENCH_CLASSES)
+    # (tools/runmain.sh reads it as GRAFT_BENCH_CLASSES)
     classes = os.environ.get("GRAFT_VERIFY_CLASSES",
                              f"{REPO}/target/scala-2.13/classes")
-    cp = f"{classes}:/opt/spark/jars/*"
-    cmd = ["java", "-Xmx8g", *ADD_OPENS,
-           "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-           "-cp", cp, "graft.Verify", SF, OUT] + \
+    cmd = [f"{REPO}/tools/runmain.sh", "graft.Verify", SF, OUT] + \
           (["|".join(sorted(ONLY))] if ONLY else [])
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    env = dict(os.environ, SPARK_GRAFT_CPUS="8", SPARK_DRIVER_MEM="8g",
+               GRAFT_BENCH_CLASSES=classes)
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:
