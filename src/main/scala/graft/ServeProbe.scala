@@ -26,6 +26,7 @@ object ServeProbe {
 
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
     import graft.operators.{Retrieval, Similarity}
+    import graft.streaming.Replay
     which match {
       case "x278" | "x284" =>
         val tbl = s"graft_probe_${which}_postings"
@@ -49,21 +50,19 @@ object ServeProbe {
             .orderBy("query_id", "rank").count() }
       case "x286" =>
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val feedS = java.nio.file.Files
-          .createTempDirectory("graft_probe_feed_s").toString
         step("build: sparse stream") {
-          d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
-            .repartition(4).write.mode("overwrite").parquet(feedS)
-          Retrieval.fileStreamIndexIngest(spark, feedS, "doc_id", "text",
-            "graft_probe_x286_postings", boundsBlocks = 16) }
-        val feedD = java.nio.file.Files
-          .createTempDirectory("graft_probe_feed_d").toString
+          Replay.withTempDir(spark, "graft_probe_feed_s") { feedS =>
+            d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
+              .repartition(4).write.mode("overwrite").parquet(feedS)
+            Retrieval.fileStreamIndexIngest(spark, feedS, "doc_id", "text",
+              "graft_probe_x286_postings", boundsBlocks = 16) } }
         step("build: dense stream") {
-          emb.select(col("vec_id"), col("label"), col("embedding"))
-            .filter(col("vec_id") >= 5 && col("vec_id") % 5 =!= 4)
-            .repartition(4).write.mode("overwrite").parquet(feedD)
-          Similarity.fileStreamIvfIngest(spark, feedD, "vec_id", "label",
-            "embedding", "graft_probe_x286_ivf")
+          Replay.withTempDir(spark, "graft_probe_feed_d") { feedD =>
+            emb.select(col("vec_id"), col("label"), col("embedding"))
+              .filter(col("vec_id") >= 5 && col("vec_id") % 5 =!= 4)
+              .repartition(4).write.mode("overwrite").parquet(feedD)
+            Similarity.fileStreamIvfIngest(spark, feedD, "vec_id", "label",
+              "embedding", "graft_probe_x286_ivf") }
           Similarity.buildIvfCodes(spark, "graft_probe_x286_ivf", "vec_id",
             "label", "embedding") }
         step("serve: bmwTopK") {

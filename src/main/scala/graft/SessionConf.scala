@@ -21,4 +21,9 @@ private[graft] object SessionConf {
       }
     }
   }
+
+  /** The session's shuffle width, `spark.sql.shuffle.partitions`: the
+    * width graft's own repartitions take unless a caller names one. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 }

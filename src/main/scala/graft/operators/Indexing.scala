@@ -27,7 +27,7 @@ object Indexing {
     * broadcast offsets, no single-partition window); the stats are one
     * groupBy over |rows|/blockSize groups with map-side combine. */
   def zoneMap(df: DataFrame, orderCol: String, statCols: Seq[String],
-      blockSize: Int, partitions: Int = 32): DataFrame = {
+      blockSize: Int, partitions: Option[Int] = None): DataFrame = {
     require(blockSize > 0, "blockSize must be positive")
     require(statCols.nonEmpty, "need at least one stat column")
     globalIndex(df, orderCol, partitions)
@@ -46,9 +46,10 @@ object Indexing {
       !(col(s"${statCol}_max") < lo || col(s"${statCol}_min") >= hi))
 
   /** Add `global_idx` (1-based, ordered by `orderCol`, which must be
-    * unique). `partitions` controls the range shuffle width. */
+    * unique). `partitions` sets the range shuffle width; by default it is
+    * the session's `spark.sql.shuffle.partitions`. */
   def globalIndex(df: DataFrame, orderCol: String,
-      partitions: Int = 32): DataFrame =
+      partitions: Option[Int] = None): DataFrame =
     globalIndexBy(df, Seq(orderCol), partitions)
 
   /** [[globalIndex]] over a COMPOSITE ordering (e.g. ts with a unique id
@@ -56,9 +57,10 @@ object Indexing {
     * shape, no key-packing arithmetic and no overflow risk. The column
     * tuple must be unique across rows. */
   def globalIndexBy(df: DataFrame, orderCols: Seq[String],
-      partitions: Int = 32): DataFrame = {
+      partitions: Option[Int] = None): DataFrame = {
     require(orderCols.nonEmpty, "need at least one order column")
-    val parts = df.repartitionByRange(partitions, orderCols.map(col): _*)
+    val parts = df.repartitionByRange(width(df, partitions),
+        orderCols.map(col): _*)
       .withColumn("__pid", spark_partition_id())
     val wLocal = Window.partitionBy("__pid").orderBy(orderCols.map(col): _*)
     // persist: the offsets aggregate and the data-side join both consume
@@ -103,11 +105,11 @@ object Indexing {
     * inclusive sums are `<v>_excl + <v>`. */
   def globalPrefixSums(df: DataFrame, groupCols: Seq[String],
       orderExprs: Seq[org.apache.spark.sql.Column], valueCols: Seq[String],
-      partitions: Int = 32): DataFrame = {
+      partitions: Option[Int] = None): DataFrame = {
     require(orderExprs.nonEmpty, "need at least one order expression")
     require(valueCols.nonEmpty, "need at least one value column")
     val rangeKeys = groupCols.map(col) ++ orderExprs
-    val parts = df.repartitionByRange(partitions, rangeKeys: _*)
+    val parts = df.repartitionByRange(width(df, partitions), rangeKeys: _*)
       .withColumn("__pid", spark_partition_id())
     val wLocal = Window
       .partitionBy(("__pid" +: groupCols).map(col): _*)
@@ -128,4 +130,8 @@ object Indexing {
       .select(df.columns.map(col) ++ valueCols.map(v =>
         (col(s"__o_$v") + col(s"__l_$v")).as(s"${v}_excl")): _*)
   }
+
+  /** The range shuffle width: the caller's, else the session's. */
+  private def width(df: DataFrame, partitions: Option[Int]): Int =
+    partitions.getOrElse(graft.SessionConf.shufflePartitions(df.sparkSession))
 }

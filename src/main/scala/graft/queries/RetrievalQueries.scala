@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.operators.{Retrieval, Similarity}
+import graft.streaming.Replay
 import org.apache.spark.sql.functions._
 
 import Tables.t
@@ -963,12 +964,12 @@ object RetrievalQueries {
        |SELECT * FROM ranked ORDER BY query_id, rank""".stripMargin)) {
     (s, dir) =>
       val d = t(s, dir, "documents")
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_x256_feed").toString
-      d.filter(col("doc_id") >= 5).repartition(4)
-        .write.mode("overwrite").parquet(feed)
-      Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
-        "graft_x256_postings")
+      Replay.withTempDir(s, "graft_x256_feed") { feed =>
+        d.filter(col("doc_id") >= 5).repartition(4)
+          .write.mode("overwrite").parquet(feed)
+        Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
+          "graft_x256_postings")
+      }
       Retrieval.bm25TopKIndexed(s, "graft_x256_postings",
           d.filter(col("doc_id") < 5), "doc_id", "text", k = 5)
         .orderBy("query_id", "rank")
@@ -1084,11 +1085,11 @@ object RetrievalQueries {
   private val x262 = Q("x262_file_stream_phrase", Some(phraseOracle)) {
     (s, dir) =>
       val d = t(s, dir, "documents")
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_x262_feed").toString
-      d.repartition(4).write.mode("overwrite").parquet(feed)
-      Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
-        "graft_x262_postings", withPositional = true)
+      Replay.withTempDir(s, "graft_x262_feed") { feed =>
+        d.repartition(4).write.mode("overwrite").parquet(feed)
+        Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
+          "graft_x262_postings", withPositional = true)
+      }
       Retrieval.phraseTopKIndexed(s, "graft_x262_postings_pos",
         Seq("Table-Hash!", "key agg row"), k = 10)
   }
@@ -1136,12 +1137,12 @@ object RetrievalQueries {
        |SELECT * FROM ranked ORDER BY query_id, rank""".stripMargin)) {
     (s, dir) =>
       val d = t(s, dir, "documents")
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_x264_feed").toString
-      d.filter(col("doc_id") >= 5).repartition(4)
-        .write.mode("overwrite").parquet(feed)
-      Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
-        "graft_x264_postings", champTopN = 1000000)
+      Replay.withTempDir(s, "graft_x264_feed") { feed =>
+        d.filter(col("doc_id") >= 5).repartition(4)
+          .write.mode("overwrite").parquet(feed)
+        Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
+          "graft_x264_postings", champTopN = 1000000)
+      }
       Retrieval.championTopK(s, "graft_x264_postings",
           d.filter(col("doc_id") < 5), "doc_id", "text", k = 5)
         .orderBy("query_id", "rank")
@@ -1336,19 +1337,19 @@ object RetrievalQueries {
     val tbl = "graft_x271_postings"
     // 80% of the corpus arrives as a 4-file stream maintaining the
     // whole family; doc ids ≡ 7 (mod 10) are all in this slice
-    val feed = java.nio.file.Files
-      .createTempDirectory("graft_x271_feed").toString
     PhaseTimer.time("x271_streamed_family_chain", "build") {
-      d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
-        .repartition(4).write.mode("overwrite").parquet(feed)
-      // champions ride at a REALISTIC capped topN: the chain certifies
-      // the maintenance paths compose (seed → per-batch refresh →
-      // tombstone filter → compaction rewrite); the equality gate is
-      // sdmTopK, which never reads `_champ` — x264 owns the uncapped
-      // champion-equality gate, so paying 4 uncapped corpus-sized
-      // refreshes here bought nothing but wall-clock
-      Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text", tbl,
-        withPositional = true, champTopN = 8)
+      Replay.withTempDir(s, "graft_x271_feed") { feed =>
+        d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
+          .repartition(4).write.mode("overwrite").parquet(feed)
+        // champions ride at a REALISTIC capped topN: the chain certifies
+        // the maintenance paths compose (seed → per-batch refresh →
+        // tombstone filter → compaction rewrite); the equality gate is
+        // sdmTopK, which never reads `_champ` — x264 owns the uncapped
+        // champion-equality gate, so paying 4 uncapped corpus-sized
+        // refreshes here bought nothing but wall-clock
+        Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text", tbl,
+          withPositional = true, champTopN = 8)
+      }
     }
     PhaseTimer.time("x271_streamed_family_chain", "maintain") {
       // takedown: one call silences BM25 + phrase + proximity + champions
@@ -1492,12 +1493,12 @@ object RetrievalQueries {
        |SELECT * FROM ranked ORDER BY query_id, rank""".stripMargin)) {
     (s, dir) =>
       val d = t(s, dir, "documents")
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_x277_feed").toString
-      d.filter(col("doc_id") >= 5).repartition(4)
-        .write.mode("overwrite").parquet(feed)
-      Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
-        "graft_x277_postings", boundsBlocks = 16)
+      Replay.withTempDir(s, "graft_x277_feed") { feed =>
+        d.filter(col("doc_id") >= 5).repartition(4)
+          .write.mode("overwrite").parquet(feed)
+        Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
+          "graft_x277_postings", boundsBlocks = 16)
+      }
       Retrieval.bmwTopK(s, "graft_x277_postings",
           d.filter(col("doc_id") < 5), "doc_id", "text", k = 5)
         .orderBy("query_id", "rank")
@@ -1613,13 +1614,13 @@ object RetrievalQueries {
   }) { (s, dir) =>
     val d = t(s, dir, "documents")
     val tbl = "graft_x281_postings"
-    val feed = java.nio.file.Files
-      .createTempDirectory("graft_x281_feed").toString
     PhaseTimer.time("x281_bounds_lifecycle_chain", "build") {
-      d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
-        .repartition(4).write.mode("overwrite").parquet(feed)
-      Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text", tbl,
-        boundsBlocks = 16)
+      Replay.withTempDir(s, "graft_x281_feed") { feed =>
+        d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
+          .repartition(4).write.mode("overwrite").parquet(feed)
+        Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text", tbl,
+          boundsBlocks = 16)
+      }
     }
     PhaseTimer.time("x281_bounds_lifecycle_chain", "maintain") {
       Retrieval.deleteFromPostingsIndex(s,
@@ -1712,20 +1713,20 @@ object RetrievalQueries {
        |ORDER BY query_id, rank""".stripMargin)) { (s, dir) =>
     val d = t(s, dir, "documents")
     val emb = t(s, dir, "embeddings")
-    val feedS = java.nio.file.Files
-      .createTempDirectory("graft_x282_feed_s").toString
     PhaseTimer.time("x282_hybrid_indexed_fusion", "build") {
-      d.filter(col("doc_id") >= 5).repartition(4)
-        .write.mode("overwrite").parquet(feedS)
-      Retrieval.fileStreamIndexIngest(s, feedS, "doc_id", "text",
-        "graft_x282_postings", boundsBlocks = 16)
-      val feedD = java.nio.file.Files
-        .createTempDirectory("graft_x282_feed_d").toString
-      emb.select(col("vec_id"), col("label"), col("embedding"))
-        .filter(col("vec_id") >= 5).repartition(4)
-        .write.mode("overwrite").parquet(feedD)
-      Similarity.fileStreamIvfIngest(s, feedD, "vec_id", "label",
-        "embedding", "graft_x282_ivf")
+      Replay.withTempDir(s, "graft_x282_feed_s") { feedS =>
+        d.filter(col("doc_id") >= 5).repartition(4)
+          .write.mode("overwrite").parquet(feedS)
+        Retrieval.fileStreamIndexIngest(s, feedS, "doc_id", "text",
+          "graft_x282_postings", boundsBlocks = 16)
+      }
+      Replay.withTempDir(s, "graft_x282_feed_d") { feedD =>
+        emb.select(col("vec_id"), col("label"), col("embedding"))
+          .filter(col("vec_id") >= 5).repartition(4)
+          .write.mode("overwrite").parquet(feedD)
+        Similarity.fileStreamIvfIngest(s, feedD, "vec_id", "label",
+          "embedding", "graft_x282_ivf")
+      }
       Similarity.buildIvfCodes(s, "graft_x282_ivf", "vec_id", "label",
         "embedding")
     }
@@ -1851,20 +1852,20 @@ object RetrievalQueries {
     // 80% of both corpora arrive as 4-file streams maintaining the whole
     // family (postings + _ub/_bm bounds; IVF vectors + exact-decimal
     // centroid state); ids ≡ 7 (mod 10) are all inside this slice
-    val feedS = java.nio.file.Files
-      .createTempDirectory("graft_x286_feed_s").toString
     PhaseTimer.time("x286_hybrid_lifecycle_chain", "build") {
-      d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
-        .repartition(4).write.mode("overwrite").parquet(feedS)
-      Retrieval.fileStreamIndexIngest(s, feedS, "doc_id", "text",
-        "graft_x286_postings", boundsBlocks = 16)
-      val feedD = java.nio.file.Files
-        .createTempDirectory("graft_x286_feed_d").toString
-      emb.select(col("vec_id"), col("label"), col("embedding"))
-        .filter(col("vec_id") >= 5 && col("vec_id") % 5 =!= 4)
-        .repartition(4).write.mode("overwrite").parquet(feedD)
-      Similarity.fileStreamIvfIngest(s, feedD, "vec_id", "label",
-        "embedding", "graft_x286_ivf")
+      Replay.withTempDir(s, "graft_x286_feed_s") { feedS =>
+        d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
+          .repartition(4).write.mode("overwrite").parquet(feedS)
+        Retrieval.fileStreamIndexIngest(s, feedS, "doc_id", "text",
+          "graft_x286_postings", boundsBlocks = 16)
+      }
+      Replay.withTempDir(s, "graft_x286_feed_d") { feedD =>
+        emb.select(col("vec_id"), col("label"), col("embedding"))
+          .filter(col("vec_id") >= 5 && col("vec_id") % 5 =!= 4)
+          .repartition(4).write.mode("overwrite").parquet(feedD)
+        Similarity.fileStreamIvfIngest(s, feedD, "vec_id", "label",
+          "embedding", "graft_x286_ivf")
+      }
       Similarity.buildIvfCodes(s, "graft_x286_ivf", "vec_id", "label",
         "embedding")
     }

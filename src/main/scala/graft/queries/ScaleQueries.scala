@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.{Curation, Multimodal, TextAnalysis}
 import graft.operators.{Combiner, Dedup, Graph, Similarity}
-import graft.streaming.EventStream
+import graft.streaming.{EventStream, Replay}
 import org.apache.spark.sql.functions._
 
 /** Beyond-reference scale operators (the LLM-training-data north star):
@@ -2491,12 +2491,12 @@ object ScaleQueries {
   private val x268 = Q("x268_ivf_file_stream_ingest", Some(ivfOracle)) {
     (s, dir) =>
       val emb = t(s, dir, "embeddings")
-      val feed = java.nio.file.Files
-        .createTempDirectory("graft_x268_feed").toString
-      emb.select(col("vec_id"), col("label"), col("embedding"))
-        .repartition(4).write.mode("overwrite").parquet(feed)
-      Similarity.fileStreamIvfIngest(s, feed, "vec_id", "label",
-        "embedding", "graft_x268_ivf")
+      Replay.withTempDir(s, "graft_x268_feed") { feed =>
+        emb.select(col("vec_id"), col("label"), col("embedding"))
+          .repartition(4).write.mode("overwrite").parquet(feed)
+        Similarity.fileStreamIvfIngest(s, feed, "vec_id", "label",
+          "embedding", "graft_x268_ivf")
+      }
       Similarity.ivfTopKIndexed(s, "graft_x268_ivf", "vec_id", "label",
           "embedding", emb.filter(col("vec_id") === 0), k = 10, nprobe = 3)
         .select(col("vec_id"), round(col("cosine"), 4).as("cosine"))
@@ -2515,11 +2515,11 @@ object ScaleQueries {
         .otherwise(when(col("label") <= 3, lit(0)).otherwise(col("label")))
         .cast("int").as("label"),
       col("embedding"))
-    val feed = java.nio.file.Files
-      .createTempDirectory(s"graft_${table}_feed").toString
-    skewed.repartition(4).write.mode("overwrite").parquet(feed)
-    Similarity.fileStreamIvfIngest(s, feed, "vec_id", "label",
-      "embedding", table)
+    Replay.withTempDir(s, s"graft_${table}_feed") { feed =>
+      skewed.repartition(4).write.mode("overwrite").parquet(feed)
+      Similarity.fileStreamIvfIngest(s, feed, "vec_id", "label",
+        "embedding", table)
+    }
     Similarity.rebalanceIvfCells(s, table, "vec_id", "label",
       "embedding", splitAbove = 2.0, mergeBelow = 0.5)
     emb

@@ -117,7 +117,7 @@ object EventStream {
         lit("__sentinel").as("event_type"), lit(0.0).as("value"))
       .coalesce(1).write.mode("append").parquet(inDir)
     val schema = spark.read.parquet(inDir).schema
-    withConf(spark, replayShuffle()) {
+    withConf(spark, replayShuffle(spark)) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
       val q = windowedCountsExact(stream, windowLength)
@@ -154,7 +154,7 @@ object EventStream {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("value", DoubleType)))
-    withConf(spark, (if (rocksDb) RocksDb else Nil) :+ replayShuffle(): _*) {
+    withConf(spark, (if (rocksDb) RocksDb else Nil) :+ replayShuffle(spark): _*) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
       val q = sessionWindows(stream, gap, watermark)
@@ -241,7 +241,7 @@ object EventStream {
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"), col("value"))
     Replay.toMemory(spark, "sesswin",
       Replay.feed(mem, rows, batches, users.map(u => (u, sentinelUs, 0.0))),
-      Seq(replayShuffle()))(sessionWindows(streamDf, gap, watermark = gap))
+      Seq(replayShuffle(spark)))(sessionWindows(streamDf, gap, watermark = gap))
   }
 
   /** Per-user sessionization with mapGroupsWithState: a session closes after
@@ -358,7 +358,7 @@ object EventStream {
         users.zipWithIndex.map { case (u, i) => (-1L - i, u, sentinelUs, 0.0) },
         users.zipWithIndex.map { case (u, i) =>
           (-1000000L - i, u, sentinelUs + gapTotalUs, 0.0) }),
-      Seq(NoDataBatchesOff, replayShuffle()))(chained)
+      Seq(NoDataBatchesOff, replayShuffle(spark)))(chained)
   }
 
   /** [[sessionizeFull]] driven by EVENT-TIME TIMEOUTS — the third state
@@ -446,7 +446,7 @@ object EventStream {
     Replay.toMemory(spark, "tsessions",
       Replay.feed(mem, rows, batches,
         Seq((-1L, sentinelUs)), Seq((-1L, sentinelUs + 2 * gapUs))),
-      Seq(NoDataBatchesOff, replayShuffle()))(
+      Seq(NoDataBatchesOff, replayShuffle(spark)))(
       sessionizeTimeout(streamDf, gapSeconds))
       .filter(col("user_id") >= 0)
   }
@@ -882,15 +882,20 @@ object EventStream {
       .filter(col("user_id") >= 0)
   }
 
-  /** Conf override lowering `spark.sql.shuffle.partitions` for a replay:
-    * every stateful streaming operator commits one state store PER shuffle
-    * partition PER micro-batch, so a small bounded replay pays the session
-    * default (32×) in fixed state-store overhead each round regardless of
-    * data volume. 8 shards keep the replay parallel while cutting that
-    * fixed cost 4×; a production stream sizes the state width to its real
-    * key volume instead. Result content is partition-count-independent
-    * (the oracle gates prove it). */
-  private def replayShuffle(n: Int = 8): (String, String) =
+  /** Conf override setting a replay's state width to the session's
+    * shuffle width, capped at 8. Every stateful streaming operator keeps
+    * one state store PER shuffle partition and commits each of them PER
+    * micro-batch. On [[Replay.withCheckpoint]]'s temp checkpoints a
+    * commit is a few local file writes, so the session's width costs
+    * little and runs the state tasks in one wave; the cap keeps a wide
+    * session (32 cores) from committing 32 mostly empty stores a batch
+    * for a bounded replay's few rows. A production stream sizes the
+    * state width to its real key volume instead. Result content is
+    * partition-count-independent (the oracle gates prove it). */
+  private def replayShuffle(spark: SparkSession): (String, String) =
+    replayShuffle(math.min(8, graft.SessionConf.shufflePartitions(spark)))
+
+  private def replayShuffle(n: Int): (String, String) =
     "spark.sql.shuffle.partitions" -> n.toString
 
   /** Conf override disabling Spark's no-data micro-batches for a replay
@@ -935,7 +940,7 @@ object EventStream {
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
     Replay.toMemory(spark, "sessions",
       Replay.feed(mem, rows, batches, users.map(u => (u, sentinelUs))),
-      Seq(replayShuffle()))(sessionizeFull(streamDf, gapSeconds))
+      Seq(replayShuffle(spark)))(sessionizeFull(streamDf, gapSeconds))
   }
 
   /** Streaming dedup: keep the first occurrence per key, with state bounded
@@ -973,7 +978,7 @@ object EventStream {
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
     Replay.toMemory(spark, "dedupe", Replay.feed(mem, rows, batches),
-      Seq(NoDataBatchesOff, replayShuffle()))(dedupeStream(streamDf, keys))
+      Seq(NoDataBatchesOff, replayShuffle(spark)))(dedupeStream(streamDf, keys))
   }
 
   /** Stream-stream interval join: attribute each purchase to the same
@@ -1056,7 +1061,7 @@ object EventStream {
       } }
     }
     Replay.toMemory(spark, "attr", data ++ flush,
-      Seq(NoDataBatchesOff, replayShuffle()))(
+      Seq(NoDataBatchesOff, replayShuffle(spark)))(
       attributionJoin(streamDf(memC), streamDf(memP), withinSeconds,
         joinType = joinType))
       .filter(col("user_id") >= 0)
@@ -1124,7 +1129,7 @@ object EventStream {
     var state: Array[org.apache.spark.sql.Row] = Array.empty
     var stateSchema: org.apache.spark.sql.types.StructType = null
     Replay.run(spark, "incr", Replay.feed(mem, rows, batches),
-        Seq(replayShuffle())) {
+        Seq(replayShuffle(spark))) {
       streamDf.writeStream
         .outputMode(OutputMode.Append())
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1222,20 +1227,35 @@ private[graft] object Replay {
       }
     }
 
-  /** `body` on the caller's durable `checkpoint`, left as it is; without
-    * one, on a fresh temp checkpoint named after `label` that is deleted
-    * when `body` returns or throws.
+  /** `body` on the caller's durable `checkpoint`, left as it is and
+    * written by Spark's default checkpoint file manager; without one, on
+    * a fresh temp checkpoint named after `label` ([[withTempDir]]),
+    * written by [[LocalCheckpointFileManager]] so that no micro-batch
+    * forks a process. The manager conf is set for `body` only, so every
+    * query `body` starts, and the state stores those queries open, use
+    * it. */
+  def withCheckpoint[T](spark: SparkSession, label: String,
+      checkpoint: Option[String])(body: String => T): T =
+    checkpoint match {
+      case Some(ckpt) => body(ckpt)
+      case None => withTempDir(spark, s"${label}_ckpt") { ckpt =>
+        withConf(spark, "spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[LocalCheckpointFileManager].getName)(body(ckpt))
+      }
+    }
+
+  /** `body` on a fresh temp directory named after `prefix`, deleted when
+    * `body` returns or throws.
     *
     * The RocksDB store's background maintenance may still upload the
     * final snapshot of a stopped query's stores after that delete
     * (unloaded providers are queued for one last maintenance pass), so
     * the directory is also registered for deletion at JVM exit. */
-  def withCheckpoint[T](spark: SparkSession, label: String,
-      checkpoint: Option[String])(body: String => T): T = {
-    val ckpt = checkpoint.getOrElse(
-      java.nio.file.Files.createTempDirectory(s"${label}_ckpt").toString)
-    try body(ckpt) finally if (checkpoint.isEmpty) {
-      val p = new org.apache.hadoop.fs.Path(ckpt)
+  def withTempDir[T](spark: SparkSession, prefix: String)(
+      body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(dir) finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.deleteOnExit(p)
       fs.delete(p, true)

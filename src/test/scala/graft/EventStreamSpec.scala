@@ -398,10 +398,12 @@ class EventStreamSpec extends SparkSpec {
     // replay must not leave a previously unset key explicitly set
     val keys = Seq(key, "spark.sql.shuffle.partitions",
       "spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "spark.sql.streaming.checkpointFileManagerClass")
     val explicitValues = Seq("true", "6",
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-      "false")
+      "false", "org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager")
     def explicit() = keys.map(spark.conf.getAll.get)
     val original = explicit()
     val events = Seq(
@@ -531,5 +533,64 @@ class EventStreamSpec extends SparkSpec {
     assert(spark.table("graft_test_ckpt_fivf").count() == 2)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(feed))
     assert(ckpts() -- before == Set.empty[String])
+  }
+
+  test("a temp-checkpoint replay spawns no process on its checkpoint") {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val file = java.nio.file.Files.createTempFile("replay_forks", ".jfr")
+    try {
+      val events = (0 until 200).map(i => (i.toLong, ts(i % 60), i % 7L,
+          "click", 1.0)).toDF("event_id", "ts", "user_id", "event_type", "value")
+      rec.start()
+      // one fork of our own proves the recording sees process starts
+      new ProcessBuilder("true").start().waitFor()
+      val sessions = EventStream.sessionizeReplay(spark, events).count()
+      rec.stop()
+      rec.dump(file)
+      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(file)
+        .asScala.map(_.getString("command")).toSeq
+      assert(sessions > 0)
+      assert(commands.contains("true"), s"no ProcessStart recorded: $commands")
+      // sessionizeReplay's temp checkpoint is `sessions_ckpt<random>`
+      val forks = commands.filter(_.contains("sessions_ckpt"))
+      assert(forks.isEmpty, s"${forks.length} process starts name the " +
+        s"checkpoint, e.g. ${forks.take(3).mkString("; ")}")
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(file)
+    }
+  }
+
+  test("a replay's state width is the session's, capped at 8") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val events = Seq((1L, ts(0), 10L, "click", 1.0),
+        (2L, ts(45), 10L, "click", 2.0), (3L, ts(7), 11L, "purchase", 3.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    def stateWidths(sessionWidth: Int): Set[Long] = {
+      val seen = collection.mutable.Set[Long]()
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          seen.synchronized {
+            seen ++= e.progress.stateOperators.map(_.numShufflePartitions)
+          }
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      }
+      spark.streams.addListener(listener)
+      try {
+        SessionConf.withConf(spark,
+            "spark.sql.shuffle.partitions" -> sessionWidth.toString) {
+          EventStream.sessionizeReplay(spark, events, batches = 2).count()
+        }
+        org.apache.spark.sql.graftbridge.Bridge
+          .flushListenerBus(spark.sparkContext)
+      } finally spark.streams.removeListener(listener)
+      seen.synchronized(seen.toSet)
+    }
+    assert(stateWidths(4) == Set(4L))
+    assert(stateWidths(32) == Set(8L))
   }
 }

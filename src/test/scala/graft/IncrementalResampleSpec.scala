@@ -90,7 +90,7 @@ class IncrementalResampleSpec extends SparkSpec {
 
   test("globalIndex equals the naive global row_number") {
     val df = (1 to 500).map(i => Tuple1(i * 3L)).toDF("k")
-    val out = graft.operators.Indexing.globalIndex(df, "k", partitions = 8)
+    val out = graft.operators.Indexing.globalIndex(df, "k", partitions = Some(8))
       .orderBy("k").collect()
     out.zipWithIndex.foreach { case (r, i) =>
       assert(r.getAs[Long]("global_idx") == i + 1L,

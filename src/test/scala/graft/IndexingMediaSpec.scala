@@ -29,7 +29,7 @@ class IndexingMediaSpec extends SparkSpec {
     // regression for the boundary-resample desync: two executions of the
     // range exchange must not disagree (caught at 15k rows, x56)
     val df = (1L to 5000L).map(i => Tuple1(i * 7 % 5001)).toDF("k")
-    val idx = Indexing.globalIndex(df, "k", partitions = 16)
+    val idx = Indexing.globalIndex(df, "k", partitions = Some(16))
       .select("global_idx").collect().map(_.getLong(0)).sorted
     assert(idx.toSeq == (1L to 5000L).toSeq)
   }

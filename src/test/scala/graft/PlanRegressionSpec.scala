@@ -976,4 +976,20 @@ class PlanRegressionSpec extends SparkSpec {
       }
     }
   }
+
+  test("Indexing helpers range-shuffle at the session width, not a literal") {
+    // globalIndex / globalIndexBy / globalPrefixSums / zoneMap size their
+    // range exchange from spark.sql.shuffle.partitions (they used a
+    // literal 32 before)
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val byNum = """rangepartitioning\(.*, (\d+)\), REPARTITION_BY_NUM""".r
+    for (q <- Seq("x48_global_index", "x56_zone_map", "x140_ks_test",
+        "x142_mann_whitney", "x146_gini_concentration")) {
+      val p = plan(q)
+      val widths = byNum.findAllMatchIn(p).map(_.group(1)).toSeq
+      assert(widths.nonEmpty, s"$q: no range repartition:\n" + p.take(800))
+      assert(widths.forall(_ == width),
+        s"$q range-shuffles at ${widths.mkString(",")}, session width $width")
+    }
+  }
 }

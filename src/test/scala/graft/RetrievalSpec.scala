@@ -755,28 +755,29 @@ class RetrievalSpec extends SparkSpec {
   test("fileStreamIndexIngest: durable-checkpoint resume skips committed " +
     "batches — no duplication, index unchanged") {
     val t = "graft_test_feedres"
-    val feed = java.nio.file.Files
-      .createTempDirectory("graft_feedres").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_feedres_ckpt").toString
-    corpus.filter($"doc_id" <= 11).repartition(1)
-      .write.mode("overwrite").parquet(feed)
-    corpus.filter($"doc_id" > 11).repartition(1)
-      .write.mode("append").parquet(feed)
-    Retrieval.fileStreamIndexIngest(spark, feed, "doc_id", "text", t,
-      buckets = 4, checkpointDir = Some(ckpt))
-    val queries = Seq((1L, "apple banana")).toDF("doc_id", "text")
-    def score() = Retrieval.bm25TopKIndexed(spark, t, queries,
-      "doc_id", "text", k = 5).orderBy("query_id", "rank")
-      .collect().toSeq
-    val first = score()
-    assert(first.nonEmpty)
-    val nDocs = spark.table(s"${t}_docs").count()
-    // resume with the same checkpoint: nothing re-ingested, nothing wiped
-    Retrieval.fileStreamIndexIngest(spark, feed, "doc_id", "text", t,
-      buckets = 4, checkpointDir = Some(ckpt))
-    assert(score() == first)
-    assert(spark.table(s"${t}_docs").count() == nDocs)
+    // both directories are deleted when the test ends, pass or fail
+    graft.streaming.Replay.withTempDir(spark, "graft_feedres") { feed =>
+      graft.streaming.Replay.withTempDir(spark, "graft_feedres_ckpt") { ckpt =>
+        corpus.filter($"doc_id" <= 11).repartition(1)
+          .write.mode("overwrite").parquet(feed)
+        corpus.filter($"doc_id" > 11).repartition(1)
+          .write.mode("append").parquet(feed)
+        Retrieval.fileStreamIndexIngest(spark, feed, "doc_id", "text", t,
+          buckets = 4, checkpointDir = Some(ckpt))
+        val queries = Seq((1L, "apple banana")).toDF("doc_id", "text")
+        def score() = Retrieval.bm25TopKIndexed(spark, t, queries,
+          "doc_id", "text", k = 5).orderBy("query_id", "rank")
+          .collect().toSeq
+        val first = score()
+        assert(first.nonEmpty)
+        val nDocs = spark.table(s"${t}_docs").count()
+        // resume with the same checkpoint: nothing re-ingested, nothing wiped
+        Retrieval.fileStreamIndexIngest(spark, feed, "doc_id", "text", t,
+          buckets = 4, checkpointDir = Some(ckpt))
+        assert(score() == first)
+        assert(spark.table(s"${t}_docs").count() == nDocs)
+      }
+    }
   }
 
   test("minSpanTopK: exact minimal covers, strict all-terms gate, and " +

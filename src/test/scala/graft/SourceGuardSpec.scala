@@ -79,4 +79,26 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(reads.isEmpty, "environment read in a library package:\n" +
       show(reads))
   }
+
+  test("the checkpoint file manager is swapped only by Replay") {
+    // Replay.withCheckpoint's one override, around its own temp checkpoints
+    val owner = "graft/streaming/EventStream.scala"
+    assertOnlyIn("checkpointFileManagerClass", owner, 1)
+    // object Replay spans its header line to the next top-level `}`
+    val inFile = codeLines.filter(_._1 == owner)
+    val start = inFile.find(_._3.startsWith("private[graft] object Replay "))
+      .map(_._2).getOrElse(fail("object Replay not found in " + owner))
+    val end = inFile.find(l => l._2 > start && l._3.startsWith("}"))
+      .map(_._2).getOrElse(Int.MaxValue)
+    val set = hits("checkpointFileManagerClass").head
+    assert(set._2 > start && set._2 < end,
+      "checkpointFileManagerClass set outside object Replay:\n" +
+        show(Seq(set)))
+  }
+
+  test("replay and index widths take no literal default") {
+    val literals = hits("""def replayShuffle\([^)]*=""") ++
+      hits("""partitions: (Int|Option\[Int\]) = (\d|Some)""")
+    assert(literals.isEmpty, "a literal default width:\n" + show(literals))
+  }
 }
