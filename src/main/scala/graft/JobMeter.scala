@@ -16,12 +16,18 @@ import scala.collection.mutable
 private[graft] final class JobMeter private ()
     extends SparkListener with QueryExecutionListener {
   private var nJobs = 0
+  // per job: the root SQL execution that started it, if any
+  private val jobSql = mutable.ArrayBuffer[Option[String]]()
   private val stageAggs = mutable.LinkedHashMap[Int, JobMeter.Stage]()
   private val qes = mutable.ArrayBuffer[QueryExecution]()
   private var wall = 0.0
 
   /** Jobs started inside the block. */
   def jobs: Int = synchronized(nJobs)
+  /** Jobs started outside any SQL execution (plain RDD actions). */
+  def jobsOutsideSql: Int = synchronized(jobSql.count(_.isEmpty))
+  /** Distinct root SQL executions that started at least one job. */
+  def sqlExecutionsWithJobs: Int = synchronized(jobSql.flatten.distinct.size)
   /** Task metrics summed per stage, keyed by stage id. */
   def stages: Seq[(Int, JobMeter.Stage)] = synchronized(stageAggs.toSeq)
   /** Executions of the session that finished successfully inside the block. */
@@ -32,8 +38,12 @@ private[graft] final class JobMeter private ()
   private def stage(id: Int): JobMeter.Stage =
     stageAggs.getOrElseUpdate(id, new JobMeter.Stage)
 
-  override def onJobStart(j: SparkListenerJobStart): Unit =
-    synchronized { nJobs += 1 }
+  override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+    nJobs += 1
+    jobSql += Option(j.properties).flatMap(p =>
+      Option(p.getProperty("spark.sql.execution.root.id"))
+        .orElse(Option(p.getProperty("spark.sql.execution.id"))))
+  }
 
   override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
     synchronized {

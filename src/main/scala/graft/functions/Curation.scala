@@ -1,7 +1,10 @@
 package graft.functions
 
+import graft.functions.expr.{Dec18Sums, GatherSumDec18}
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
 /** Training-data curation operators (beyond-reference north star):
@@ -760,33 +763,25 @@ object Curation {
         round(col("__s").cast("double"), 4).as("log_ratio"))
   }
 
-  /** Hashed features + bias for the logistic-regression pair below:
-    * (id, y, bucket, x) rows — md5 unigram buckets (the [[featureHash]]
-    * convention) as BINARY presence features (x = 1; bounded feature
-    * scale keeps constant-rate GD from oscillating the way raw counts
-    * measurably do), plus one bias row (bucket = dim, x = 1) per
-    * document. Token-free documents contribute no rows and are excluded
-    * from training/scoring (no features to learn from).
+  /** Per-row presence buckets for the logistic family: md5 unigram
+    * buckets (the [[featureHash]] convention), optionally plus hashed
+    * word-BIGRAM buckets in the same space, distinct within the row, and
+    * the bias bucket `dim` appended last. Features are BINARY presence
+    * (x = 1; bounded feature scale keeps constant-rate GD from
+    * oscillating the way raw counts measurably do). A row with no grams
+    * is dropped: token-free documents have no features to learn from and
+    * are excluded from training and scoring. One tokenization, no
+    * shuffle.
     *
-    * `iterate = true` (the training path) repartitions by id and
-    * persists: every GD iteration re-reads the frame twice, and the
-    * per-doc z aggregate + gradient join both key on id, so they reuse
-    * the partitioning with zero further exchanges. A single-pass scorer
-    * sets `iterate = false` — there a pre-shuffle and a cache write are
-    * pure overhead (the one z aggregate shuffles on id anyway).
-    *
-    * `bigrams = true` adds hashed word-BIGRAM presence features into the
-    * same bucket space (the fastText signature: word order enters the
+    * `bigrams = true` is the fastText signature: word order enters the
     * linear model through bigram features; collisions with unigram
-    * buckets are the accepted hashing-trick noise — size `dim` up). */
-  private def logisticFeatures(df: DataFrame, idCol: String, textCol: String,
-      label: Column, dim: Int, iterate: Boolean = true,
-      bigrams: Boolean = false): DataFrame = {
+    * buckets are the accepted hashing-trick noise — size `dim` up. */
+  private def rowBuckets(df: DataFrame, idCol: String, textCol: String,
+      label: Column, dim: Int, bigrams: Boolean): DataFrame = {
     val base = df.select(col(idCol).as("id"), label.cast("int").as("y"),
       Dedup.words(col(textCol)).as("__ws"))
-    // per-doc array_distinct BEFORE the hash: presence features dedupe
-    // per (id, bucket) anyway, so collapsing repeated words row-locally
-    // (no shuffle) saves one md5+conv per repeated occurrence
+    // per-doc array_distinct BEFORE the hash: collapsing repeated words
+    // row-locally saves one md5+conv per repeated occurrence
     val gramsCol =
       if (!bigrams) array_distinct(col("__ws"))
       else array_distinct(concat(col("__ws"),
@@ -796,20 +791,22 @@ object Curation {
           expr("transform(sequence(1, size(__ws) - 1), " +
             "i -> concat(element_at(__ws, i), ' ', element_at(__ws, i + 1)))"))
           .otherwise(expr("array()").cast("array<string>"))))
-    val counts = base.select(col("id"), col("y"),
-        explode(gramsCol).as("__w"))
-      .withColumn("bucket",
-        conv(substring(md5(col("__w")), 1, 8), 16, 10).cast("long") % dim)
-      .select("id", "y", "bucket").distinct()
-      .withColumn("x", lit(1L))
-    val all = counts.unionByName(counts.select(col("id"), col("y")).distinct()
-      .select(col("id"), col("y"), lit(dim.toLong).as("bucket"),
-        lit(1L).as("x")))
-    if (iterate)
-      all.repartition(col("id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else all
+    base.select(col("id"), col("y"), transform(gramsCol, w =>
+        conv(substring(md5(w), 1, 8), 16, 10).cast("long") % dim).as("__h"))
+      .filter(size(col("__h")) > 0)
+      .select(col("id"), col("y"),
+        concat(array_distinct(col("__h")), array(lit(dim.toLong))).as("__bs"))
   }
+
+  /** Exploded (id, y, bucket) presence rows for the single-pass scorers:
+    * one row per distinct feature of a featured document, bias included. */
+  private def logisticFeatures(df: DataFrame, idCol: String, textCol: String,
+      label: Column, dim: Int, bigrams: Boolean): DataFrame =
+    explodeBuckets(rowBuckets(df, idCol, textCol, label, dim, bigrams))
+      .distinct()
+
+  private def explodeBuckets(docs: DataFrame): DataFrame =
+    docs.select(col("id"), col("y"), explode(col("__bs")).as("bucket"))
 
   /** Per-doc exact-decimal logit: one pass over the feature frame with
     * the broadcast (≤ dim+1)-row weight frame. A corpus bucket with no
@@ -823,11 +820,8 @@ object Curation {
       // NOTE: stays the interpreted decimal sum deliberately — a native
       // TypedImperativeAggregate here would put corpus-many keys through
       // ObjectHashAggregate, whose 128-key fallback degrades to
-      // sort-based aggregation (measured 2x SLOWER at sf0.1). The
-      // small-key aggregates (per-bucket gradient, loss, norm) use
-      // SumDec18 instead.
-      .agg(sum((col("x").cast("double") * col("weight"))
-          .cast("decimal(28,18)")).as("__z"),
+      // sort-based aggregation (measured 2x SLOWER at sf0.1)
+      .agg(sum(col("weight").cast("decimal(28,18)")).as("__z"),
         max(col("y")).as("y"))
 
   /** Confusion matrix + basis-point accuracy of the integer-exact
@@ -845,120 +839,135 @@ object Curation {
           .as("fn"))
       .withColumn("accuracy_bps", expr("(tp + tn) * 10000 div n_docs"))
 
-  /** Per-doc feature-ARRAY frame + driver-side class stats — the GD
-    * loop's working set: one aggregate over the persisted exploded
-    * frame (reuses its id partitioning), then every iteration is a
-    * MAP-ONLY pass (native gather-sum z against the broadcast-literal
-    * weight vector) plus one (dim+1)-key gradient aggregate. Returns
-    * (docs frame persisted by the caller's lifetime, n_docs, class
-    * weights wpos/wneg, the sorted seen-bucket list). */
-  private def logisticDocs(feats: DataFrame)
-      : (DataFrame, Double, Double, Double, Array[Long]) = {
-    val docs = feats.groupBy("id", "y")
-      .agg(sort_array(collect_list(col("bucket"))).as("__bs"))
+  /** The GD working set, PERSISTED (the caller unpersists): one row per
+    * (id, y) featured document — `__bs`, its sorted distinct buckets
+    * with the bias `dim` last, built with ONE shuffle (per-row distinct
+    * buckets → groupBy(id, y) → sorted distinct union) — and `__k`, the
+    * document's slice key (`key` of the id; null becomes -1, which no
+    * model slice contains; see [[logisticFit]]). */
+  private[graft] def logisticDocs(df: DataFrame, idCol: String,
+      textCol: String, label: Column, dim: Int, bigrams: Boolean,
+      key: Column => Column): DataFrame =
+    rowBuckets(df, idCol, textCol, label, dim, bigrams)
+      .groupBy("id", "y")
+      .agg(sort_array(array_distinct(flatten(collect_list(col("__bs")))))
+        .as("__bs"))
+      .withColumn("__k", coalesce(key(col("id")).cast("long"), lit(-1L)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** A trained model: the buckets its slice saw (ascending, bias last),
+    * its UNROUNDED weights indexed by bucket, its featured-doc count and,
+    * when traced, per step the class-weighted loss at the incoming
+    * weights and the gradient L2 norm (both unrounded). */
+  private[graft] final case class LogisticFit(seen: Array[Long],
+      w: Array[Double], n: Double, curve: Seq[(Double, Double)])
+
+  /** The logistic family's GD kernel: M models trained TOGETHER over one
+    * persisted [[logisticDocs]] frame, one Spark job per pass. Model j
+    * trains on the docs whose slice key is in [0, hi(j)) and is not
+    * skip(j) — a crossval fold's complement, a learning-curve fraction,
+    * or (hi = 1 over key 0) the whole corpus.
+    *
+    * Pass 1 (setup) counts each model's docs and classes and marks the
+    * buckets it sees; it also materializes the docs cache. Then each GD
+    * step is ONE map-only pass — a `treeAggregate` over the cached rows,
+    * the shape MLlib iterates with — carrying the M driver-held weight
+    * vectors in the task closure. Per row and model it runs the same
+    * arithmetic as the SQL step it replaces: z is
+    * [[graft.functions.expr.GatherSumDec18]]'s exact-decimal gather over
+    * the weights, the residual (σ(z) − y)·cw is the same IEEE op sequence
+    * (the class weight cw = n/(2·n_class) balances a rare class), it is
+    * quantized once to DECIMAL(28,18) and added exactly into the doc's
+    * bucket slots ([[graft.functions.expr.Dec18Sums]]). Partial sums
+    * merge exactly, so partitioning and merge order cannot change a bit;
+    * the driver then applies w(b) −= lr·(total(b)/n) to every bucket with
+    * a gradient term. A traced fit adds the loss at the incoming weights
+    * as one more exact slot of the same pass, so a curve step is still
+    * one job. A model with no featured docs keeps zero weights and runs
+    * no step; if every model is empty no step runs at all.
+    *
+    * 100 TB shape: one scan of the cached per-doc frame per step, a
+    * fixed (dim+2)-slot buffer per task and model, never a row per
+    * feature and no per-step query planning. */
+  private[graft] def logisticFit(docs: DataFrame, dim: Int, iters: Int,
+      lr: Double, hi: Array[Long], skip: Array[Long], traced: Boolean)
+      : Seq[LogisticFit] = {
+    val m = hi.length
+    val slots = dim + 1
+    val slices = new LogisticSlices(hi, skip)
+    val rows = docs.select("y", "__bs", "__k").queryExecution.toRdd
+    val stats = kernelPass(rows, new DocCounts(m, slots)) { (a, r) =>
+      a.add(slices, r); a } { (a, b) => a.merge(b) }
+    val n = stats.n.map(_.toDouble)
     // class-balanced residual weights n/(2·n_class): with a 5% positive
     // rate an unweighted full-batch GD provably stalls (the rare class's
     // gradient is outvoted ~20:1 — measured: all-negative predictions
     // after 8 steps); balanced weights also cancel the gradient of every
     // non-discriminative bucket at w=0, so learning concentrates on the
-    // separating features. max(·,1) guards a single-class corpus
+    // separating features. max(·,1) guards a single-class slice
     // (weights degenerate to a no-op instead of dividing by zero).
-    val cnt = docs.agg(count(lit(1)).cast("double").as("na"),
-      sum(when(col("y") === 1, 1L).otherwise(0L)).cast("double").as("np"),
-      sum(when(col("y") === 0, 1L).otherwise(0L)).cast("double").as("nn"))
-      .head()
-    // SQL sum over an EMPTY frame is null (count is 0): a training slice
-    // with zero featured docs (a tiny learning-curve fraction, a fold
-    // covering the whole corpus, an all-token-free corpus) must degrade
-    // to a no-op training run, not a NullPointerException (r13 ADVICE)
-    val na = cnt.getDouble(0)
-    val np = if (cnt.isNullAt(1)) 0.0 else cnt.getDouble(1)
-    val nn = if (cnt.isNullAt(2)) 0.0 else cnt.getDouble(2)
-    val wpos = na / (2.0 * math.max(np, 1.0))
-    val wneg = na / (2.0 * math.max(nn, 1.0))
-    val seen = feats.select("bucket").distinct().collect()
-      .map(_.getLong(0)).sorted
-    (docs, na, wpos, wneg, seen)
-  }
-
-  /** One full-batch GD step at the current driver-held weight vector:
-    * per-doc z via [[graft.functions.expr.GatherSumDec18]] (map-only —
-    * no join, no per-id aggregate), residual as the same fixed double op
-    * sequence as ever, then the whole (dim+1)-slot exact-decimal
-    * gradient in ONE [[graft.functions.expr.ScatterSumDec18]] aggregate
-    * (r15, the x185 watchlist: the former explode → groupBy(bucket) →
-    * sum_dec18 shape materialized one row PER FEATURE per iteration —
-    * 16 × corpus-features rows of encode/probe/quantize; the scatter
-    * aggregate walks each doc's bucket array in place and quantizes the
-    * doc's residual once). Returns (bucket → Σdec18(resid)) for buckets
-    * with at least one term — value-identical to both former
-    * formulations: same quantized terms, same exact split-long sums,
-    * same final decimal→double conversion per bucket. */
-  private def gradStep(docs: DataFrame, w: Array[Double], wpos: Double,
-      wneg: Double, nSlots: Int): Map[Long, Double] = {
-    import graft.functions.expr.GatherSumDec18.gatherSumDec18
-    import graft.functions.expr.ScatterSumDec18.scatterSumDec18
-    val z = gatherSumDec18(col("__bs"), lit(w))
-    val resid =
-      (lit(1.0) / (lit(1.0) + exp(-z)) - col("y").cast("double")) *
-        when(col("y") === 1, lit(wpos)).otherwise(lit(wneg))
-    val slots = docs
-      .select(scatterSumDec18(col("__bs"), resid, nSlots).as("__g"))
-      .head().getSeq[Any](0)
-    slots.iterator.zipWithIndex.collect {
-      case (g, b) if g != null => b.toLong -> g.asInstanceOf[Double]
-    }.toMap
-  }
-
-  /** Per-bucket weights after `iters` full-batch GD steps (unrounded
-    * DOUBLE weights plus the exact-decimal machinery the gates need).
-    *
-    * 100 TB shape (r13): the weight vector lives on the DRIVER
-    * (dim+1 ≤ 4097 doubles) and enters each iteration as an array
-    * literal, so one GD step is ONE job — a map-only pass over the
-    * persisted per-doc array frame into a (dim+1)-key gradient
-    * aggregate — instead of the former broadcast join + corpus-keyed
-    * interpreted DECIMAL aggregate + gradient join + lineage
-    * checkpoint. Every number is bit-identical to that formulation:
-    * z is the same exact decimal sum (gather-sum of the same quantized
-    * terms), the residual/update arithmetic is the same IEEE op
-    * sequence, and buckets without gradient rows keep their weight
-    * (the old left-join coalesce-0 update subtracted an exact 0). */
-  /** The full-batch GD loop body shared by [[logisticWeights]] (which
-    * owns the docs lifecycle) and [[logisticScore]] (which keeps docs
-    * alive to score from the same frame): `iters` steps of
-    * [[gradStep]] against the driver-held weight array. */
-  private def gdLoop(docs: DataFrame, n: Double, wpos: Double,
-      wneg: Double, seen: Array[Long], iters: Int, lr: Double)
-      : Array[Double] = {
-    val maxB = if (seen.isEmpty) 0 else seen.max.toInt
-    val w = new Array[Double](maxB + 1)
-    // n == 0: nothing to learn from — skip the iteration jobs entirely
-    // (every gradient is empty) instead of running `iters` no-op passes
-    if (n > 0) (1 to iters).foreach { _ =>
-      val gs = gradStep(docs, w, wpos, wneg, maxB + 1)
-      gs.foreach { case (b, g) => w(b.toInt) -= lr * (g / n) }
+    val wpos = Array.tabulate(m)(j => n(j) / (2.0 * math.max(stats.pos(j), 1L)))
+    val wneg = Array.tabulate(m)(j => n(j) / (2.0 * math.max(stats.neg(j), 1L)))
+    val seen = Array.tabulate(m)(j =>
+      (0 until slots).filter(b => stats.seen(j)(b)).map(_.toLong).toArray)
+    val w = Array.tabulate(m)(j =>
+      new Array[Double](if (seen(j).isEmpty) 1 else seen(j).last.toInt + 1))
+    val curves = Array.fill(m)(Seq.newBuilder[(Double, Double)])
+    val live = (0 until m).filter(n(_) > 0)
+    if (live.nonEmpty) for (_ <- 1 to iters) {
+      val step = new LogisticStep(slices,
+        w.map(a => UnsafeArrayData.fromPrimitiveArray(a)), wpos, wneg, traced)
+      val g = kernelPass(rows, new GdSums(m, slots, traced)) { (a, r) =>
+        step.add(a, r); a } { (a, b) => a.merge(b) }
+      for (j <- live) {
+        val s = g.sums(j)
+        val grads = (0 until slots).filter(b => s.seen(b)).map(b =>
+          b -> s.total(b).doubleValue / n(j))
+        if (traced) {
+          // grad-norm: sqrt of the exact dec18 sum of grad², replayed
+          // driver-side over the (dim+1)-bounded gradient; the loss slot
+          // with no term (an all-null-loss slice) reads 0
+          var g2 = java.math.BigDecimal.ZERO
+          grads.foreach { case (_, gb) =>
+            val q = graft.functions.expr.DotProductDec18.q18OrNull(gb * gb)
+            if (q ne null) g2 = g2.add(q)
+          }
+          val ls = if (s.seen(slots)) s.total(slots).doubleValue else 0.0
+          curves(j) += ((ls / n(j), math.sqrt(g2.doubleValue)))
+        }
+        grads.foreach { case (b, gb) => w(j)(b) -= lr * gb }
+      }
     }
-    w
+    (0 until m).map(j => LogisticFit(seen(j), w(j), n(j), curves(j).result()))
   }
 
-  private def logisticWeights(feats: DataFrame, iters: Int, lr: Double)
-      : DataFrame = {
-    val (docs, n, wpos, wneg, seen) = logisticDocs(feats)
-    val w =
-      try gdLoop(docs, n, wpos, wneg, seen, iters, lr)
-      finally docs.unpersist()
-    val spark = feats.sparkSession
+  /** The kernel's only Spark job: one tree-aggregated pass over the
+    * cached per-doc rows. */
+  private def kernelPass[A: scala.reflect.ClassTag](
+      rows: org.apache.spark.rdd.RDD[InternalRow],
+      zero: A)(add: (A, InternalRow) => A)(
+      merge: (A, A) => A): A =
+    rows.treeAggregate(zero)(add, merge)
+
+  /** One fit's (bucket, weight) frame over the buckets its slice saw. */
+  private def weightsOf(spark: org.apache.spark.sql.SparkSession,
+      fit: LogisticFit): DataFrame = {
     import spark.implicits._
-    seen.toSeq.map(b => (b, w(b.toInt))).toDF("bucket", "weight")
+    fit.seen.toSeq.map(b => (b, fit.w(b.toInt))).toDF("bucket", "weight")
   }
+
+  /** A small result frame (≤ k or |fractions| rows) collected into a
+    * driver-local frame: no persisted RDD outlives the call, unlike a
+    * localCheckpoint. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Model-based quality filtering, training side: a fastText-shaped
     * linear classifier (logistic regression over hashed unigram PRESENCE features +
     * bias) trained with `iters` full-batch gradient-descent steps — the
     * standard "train a small quality classifier, score the corpus" step
-    * of LLM data curation, expressed entirely as Spark plans.
+    * of LLM data curation.
     *
     * Determinism (gate-grade): per-row double products are bit-identical
     * cross-engine; every sum that could reorder (per-doc z, per-bucket
@@ -967,13 +976,12 @@ object Curation {
     * per doc/bucket. The whole training run replays in SQL by unrolling
     * the iterations.
     *
-    * 100 TB design: each iteration is ONE pass over the persisted
-    * (id, y, bucket, x) frame joined with the broadcast (dim+1)-row
-    * weight frame (per-doc z), plus one pass for the gradient — the
-    * Lloyd-iteration shape of [[graft.operators.Similarity]]'s k-means.
-    * Weight frames localCheckpoint per iteration so lineage stays flat.
-    * DECIMAL(28,18) leaves 10 integer digits for the gradient sums —
-    * rescale to (38,18) beyond ~10⁹-token corpora per bucket.
+    * 100 TB design: the per-doc bucket arrays are built with one shuffle
+    * and cached; one setup pass counts the classes, then every GD step
+    * is ONE map-only Spark job over the cache ([[logisticFit]]), with the
+    * (dim+1 ≤ 4097)-entry weight vector on the driver. DECIMAL(28,18)
+    * leaves 10 integer digits for the gradient sums — rescale to (38,18)
+    * beyond ~10⁹-token corpora per bucket.
     *
     * Returns (bucket, weight) with `bucket = dim` the bias. */
   def logisticTrain(df: DataFrame, idCol: String, textCol: String,
@@ -981,48 +989,42 @@ object Curation {
       roundTo: Int = 6, bigrams: Boolean = false): DataFrame = {
     require(dim >= 2 && dim <= 4096, s"dim=$dim out of [2,4096]")
     require(iters >= 1 && iters <= 16, "iters out of [1,16]")
-    val feats = logisticFeatures(df, idCol, textCol, label, dim,
-      bigrams = bigrams)
-    // the GD loop is eager (driver-held weights) and the returned frame
-    // is a driver-local toDF, so the persisted feature frame can be
-    // released here — no downstream plan references it (r13 ADVICE:
-    // persisted corpus frames must not accumulate across calls)
-    val w =
-      try logisticWeights(feats, iters, lr)
-      finally feats.unpersist()
-    w.select(col("bucket"), round(col("weight"), roundTo).as("weight"))
+    val fit = fitOne(df, idCol, textCol, label, dim, iters, lr, bigrams,
+      traced = false)
+    weightsOf(df.sparkSession, fit)
+      .select(col("bucket"), round(col("weight"), roundTo).as("weight"))
+  }
+
+  /** One whole-corpus model; the docs cache is released before return. */
+  private def fitOne(df: DataFrame, idCol: String, textCol: String,
+      label: Column, dim: Int, iters: Int, lr: Double, bigrams: Boolean,
+      traced: Boolean): LogisticFit = {
+    val docs = logisticDocs(df, idCol, textCol, label, dim, bigrams,
+      _ => lit(0L))
+    try logisticFit(docs, dim, iters, lr, Array(1L), Array(-1L), traced).head
+    finally docs.unpersist()
   }
 
   /** Train-and-score in one call: trains on `df` with [[logisticTrain]]'s
-    * GD loop (UNROUNDED weights, bit-compatible with the pre-split form
-    * of this operator) and reports the confusion matrix + accuracy over
-    * the same corpus. Kept for self-evaluation (x177); a production
-    * pipeline trains ONCE on its labeled sample and scores corpora with
+    * GD loop (UNROUNDED weights) and reports the confusion matrix +
+    * accuracy over the same corpus, scored from the same cached per-doc
+    * frame with the exact-decimal gather z (map-only, one row per doc).
+    * Kept for self-evaluation (x177); a production pipeline trains ONCE
+    * on its labeled sample and scores corpora with
     * [[logisticScoreWith]] / [[logisticPredictWith]] — scoring must
-    * never pay the 8-iteration training cost per call. */
+    * never pay the training cost per call. */
   def logisticScore(df: DataFrame, idCol: String, textCol: String,
       label: Column, dim: Int = 32, iters: Int = 8, lr: Double = 0.5,
       bigrams: Boolean = false): DataFrame = {
     require(dim >= 2 && dim <= 4096, s"dim=$dim out of [2,4096]")
-    val feats = logisticFeatures(df, idCol, textCol, label, dim,
-      bigrams = bigrams)
-    val (docs, n, wpos, wneg, seen) =
-      try logisticDocs(feats) finally feats.unpersist()
-    // score from the SAME compact docs frame the GD loop iterates on
-    // (r15, the x185 watchlist): the former zOf(feats, w) pass paid a
-    // broadcast join + per-id DECIMAL aggregate over the corpus-of-grams
-    // feature frame; the native gather-sum over the per-doc bucket
-    // arrays is the identical exact-decimal z (same quantized terms,
-    // and exact decimal addition is order-free — the r14 bit-parity
-    // pin) with a MAP-ONLY pass over one row per doc. feats is released
-    // as soon as logisticDocs' eager reads are done; the 1-row confusion
-    // frame is checkpointed eagerly before docs goes away.
+    val docs = logisticDocs(df, idCol, textCol, label, dim, bigrams,
+      _ => lit(0L))
     try {
       import graft.functions.expr.GatherSumDec18.gatherSumDec18
-      val w = gdLoop(docs, n, wpos, wneg, seen, iters, lr)
-      confusionOf(docs.select(col("id"),
-          gatherSumDec18(col("__bs"), lit(w)).as("__z"), col("y")))
-        .localCheckpoint(eager = true)
+      val fit = logisticFit(docs, dim, iters, lr, Array(1L), Array(-1L),
+        traced = false).head
+      local(confusionOf(docs.select(col("id"),
+        gatherSumDec18(col("__bs"), lit(fit.w)).as("__z"), col("y"))))
     } finally docs.unpersist()
   }
 
@@ -1037,16 +1039,14 @@ object Curation {
     * corpus pass — tokenize → distinct presence features → broadcast
     * join with the ≤ (dim+1)-row weight frame → per-doc z aggregate →
     * confusion aggregate. Zero GD iterations, zero persisted frames,
-    * zero repartition (the single z aggregate provides its own shuffle);
-    * `dim` must match the dimension the weights were trained with. */
+    * zero repartition; `dim` must match the dimension the weights were
+    * trained with. */
   def logisticScoreWith(df: DataFrame, idCol: String, textCol: String,
       label: Column, weights: DataFrame, dim: Int = 32,
       bigrams: Boolean = false): DataFrame = {
     require(dim >= 2 && dim <= 4096, s"dim=$dim out of [2,4096]")
     confusionOf(zOf(
-      logisticFeatures(df, idCol, textCol, label, dim, iterate = false,
-        bigrams = bigrams),
-      weights))
+      logisticFeatures(df, idCol, textCol, label, dim, bigrams), weights))
   }
 
   /** Per-document exact-DECIMAL logit under published weights — the
@@ -1062,8 +1062,7 @@ object Curation {
       label: Column, weights: DataFrame, dim: Int = 32,
       bigrams: Boolean = false): DataFrame = {
     require(dim >= 2 && dim <= 4096, s"dim=$dim out of [2,4096]")
-    zOf(logisticFeatures(df, idCol, textCol, label, dim, iterate = false,
-        bigrams = bigrams), weights)
+    zOf(logisticFeatures(df, idCol, textCol, label, dim, bigrams), weights)
       .select(col("id"), col("y"), col("__z").as("z"))
   }
 
@@ -1077,9 +1076,7 @@ object Curation {
       weights: DataFrame, dim: Int = 32, roundTo: Int = 6,
       bigrams: Boolean = false): DataFrame = {
     require(dim >= 2 && dim <= 4096, s"dim=$dim out of [2,4096]")
-    zOf(logisticFeatures(df, idCol, textCol, lit(0), dim, iterate = false,
-        bigrams = bigrams),
-        weights)
+    zOf(logisticFeatures(df, idCol, textCol, lit(0), dim, bigrams), weights)
       .select(col("id"),
         round(lit(1.0) / (lit(1.0) + exp(-col("__z").cast("double"))), roundTo)
           .as("prob"),
@@ -1092,9 +1089,9 @@ object Curation {
     * folds ([[logisticTrain]], published ROUNDED weights — the same
     * train-once-publish-apply contract as [[logisticScoreWith]]) and
     * grade the held-out fold THRESHOLD-FREE with the tie-robust rank AUC
-    * ([[graft.operators.Stats.binaryAuc]] pointed at the exact-DECIMAL
-    * logit z — AUC is invariant under the monotone σ, so no exp() enters
-    * the gate). One row per fold: held-out class counts, the
+    * ([[graft.operators.Stats.binaryAucBy]] per fold, pointed at the
+    * exact-DECIMAL logit z — AUC is invariant under the monotone σ, so no
+    * exp() enters the gate). One row per fold: held-out class counts, the
     * Mann–Whitney U₂ rank sum (integer-exact), AUC/Gini/KS. A single-class
     * held-out fold reports null metrics (binaryAuc's convention); a fold
     * whose held-out slice has NO featured documents emits no row at all
@@ -1108,41 +1105,44 @@ object Curation {
     * train/test boundary, dedup first (or key the hash by a cluster id) —
     * [[graft.operators.Similarity.splitLeakage]] audits exactly that.
     *
-    * 100 TB shape: k sequential trainings, each the Lloyd-iteration plan
-    * of [[logisticTrain]] (persisted (k−1)/k feature frame + broadcast
-    * (dim+1)-row weights per iteration), plus one single-pass scoring of
-    * the held-out 1/k. Nothing here is more expensive than k× the
-    * training run itself; the per-fold AUC reduces the held-out corpus to
-    * its distinct-z frame before any window runs. */
+    * 100 TB shape: the k fold models train TOGETHER in [[logisticFit]]
+    * (one cached per-doc frame, one setup pass, then one job per GD step
+    * for all folds — not k trainings), and the held-out folds are scored
+    * in one pass from the same cache with the per-fold rounded weights
+    * broadcast. */
   def logisticCrossVal(df: DataFrame, idCol: String, textCol: String,
       label: Column, k: Int = 3, dim: Int = 32, iters: Int = 8,
       lr: Double = 0.5, roundTo: Int = 6, bigrams: Boolean = false)
       : DataFrame = {
     require(k >= 2 && k <= 8, s"k=$k out of [2,8]")
-    // features are a PER-ROW function of the document, so fold filters
-    // commute with the build: ONE persisted full-corpus feature frame
-    // serves every fold's training and held-out scoring, instead of 2k
-    // tokenize+hash rebuilds (r13 — the crossval queries' remaining
-    // cost). The fold is recomputed from the carried id, identically.
-    val feats = logisticFeatures(df, idCol, textCol, label, dim,
-      bigrams = bigrams)
-    val foldOfId = conv(substring(md5(col("id").cast("string")), 1, 8),
-      16, 10).cast("long") % k
+    val docs = logisticDocs(df, idCol, textCol, label, dim, bigrams,
+      id => conv(substring(md5(id.cast("string")), 1, 8), 16, 10)
+        .cast("long") % k)
+    val spark = df.sparkSession
+    import spark.implicits._
     try {
-      val perFold = (0 until k).map { i =>
-        val w = logisticWeights(feats.filter(foldOfId =!= i), iters, lr)
-          .select(col("bucket"), round(col("weight"), roundTo).as("weight"))
-        val z = zOf(feats.filter(foldOfId === i), w)
-        graft.operators.Stats.binaryAuc(z, "__z", col("y") === 1)
-          .select(lit(i).cast("long").as("fold"), col("n_pos"), col("n_neg"),
+      val fits = logisticFit(docs, dim, iters, lr, Array.fill(k)(k.toLong),
+        Array.tabulate(k)(_.toLong), traced = false)
+      val w = fits.zipWithIndex.flatMap { case (f, i) =>
+          f.seen.toSeq.map(b => (i.toLong, b, f.w(b.toInt))) }
+        .toDF("__k", "bucket", "weight")
+        .select(col("__k"), col("bucket"),
+          round(col("weight"), roundTo).as("weight"))
+      val z = docs.filter(col("__k") >= 0)
+        .select(col("__k"), col("id"), col("y"),
+          explode(col("__bs")).as("bucket"))
+        .join(broadcast(w), Seq("__k", "bucket"))
+        .groupBy("__k", "id")
+        .agg(sum(col("weight").cast("decimal(28,18)")).as("__z"),
+          max(col("y")).as("y"))
+      // the AUC's prefix sums cache their range-shuffled frame; release
+      // it with the result collected
+      graft.operators.Caches.withCaches(spark)(local(
+        graft.operators.Stats.binaryAucBy(z, "__k", "__z", col("y") === 1)
+          .select(col("__k").as("fold"), col("n_pos"), col("n_neg"),
             col("u2"), col("auc"), col("gini"), col("ks"))
-      }
-      // ≤ k rows: materialize eagerly so the persisted full-corpus
-      // feature frame can be released in the finally (r13 ADVICE — it
-      // accumulated MEMORY_AND_DISK blocks across calls)
-      perFold.reduce(_.unionByName(_)).orderBy("fold")
-        .localCheckpoint(eager = true)
-    } finally feats.unpersist()
+          .orderBy("fold")))
+    } finally docs.unpersist()
   }
 
   /** Learning curve for the quality classifier — "is more labeled data
@@ -1153,49 +1153,43 @@ object Curation {
     * are NESTED, 25% ⊂ 50% ⊂ 100%, so the curve varies only the data
     * quantity, never the sample identity) and score the SAME eval slice
     * with the published rounded weights ([[logisticScoreWith]]'s
-    * one-pass broadcast plan). One row per fraction: the integer-exact
-    * confusion matrix + basis-point accuracy on the common eval set.
+    * broadcast plan). One row per fraction: the integer-exact confusion
+    * matrix + basis-point accuracy on the common eval set.
     *
-    * Scale shape: |fractions| sequential trainings (each the
-    * Lloyd-iteration plan of [[logisticTrain]] over its subset) + one
-    * single-pass scoring each; the eval slice is scored with broadcast
-    * weights, never re-trained. Token-free eval docs carry no features
-    * and drop from every row identically (the n_docs column is constant
-    * down the curve — a non-constant n_docs means the fixture changed,
-    * not the operator). */
+    * Scale shape: one cached per-doc frame over the whole corpus (slice
+    * key: the fraction hash for pool docs, 100 for eval docs, which no
+    * fraction contains); every fraction trains TOGETHER in
+    * [[logisticFit]], one job per GD step; the eval slice is scored from
+    * the same cache with broadcast weights, never re-trained. Token-free
+    * eval docs carry no features and drop from every row identically (the
+    * n_docs column is constant down the curve — a non-constant n_docs
+    * means the fixture changed, not the operator). */
   def learningCurve(df: DataFrame, idCol: String, textCol: String,
       label: Column, fractionsPct: Seq[Int] = Seq(25, 50, 100),
       dim: Int = 32, iters: Int = 8, lr: Double = 0.5, roundTo: Int = 6,
       bigrams: Boolean = false): DataFrame = {
     require(fractionsPct.nonEmpty && fractionsPct.forall(p => p >= 1 && p <= 100),
       "fractionsPct must be within [1,100]")
-    val h = (tag: String) =>
-      conv(substring(md5(concat(lit(tag + ":"), col(idCol).cast("string"))),
+    val h = (tag: String, id: Column) =>
+      conv(substring(md5(concat(lit(tag + ":"), id.cast("string"))),
         1, 8), 16, 10).cast("long")
-    val isEval = h("lc-eval") % 5 === 0
-    // fraction filters commute with the per-row feature build (the
-    // crossval amortization, r13): one persisted pool feature frame is
-    // filtered per fraction, and the common eval slice's features are
-    // built and persisted ONCE instead of once per fraction
-    val pool = logisticFeatures(df.filter(!isEval), idCol, textCol, label,
-      dim, bigrams = bigrams)
-    val fracOfId = conv(substring(md5(concat(lit("lc-frac:"),
-      col("id").cast("string"))), 1, 8), 16, 10).cast("long") % 100
-    val evalFeats = logisticFeatures(df.filter(isEval), idCol, textCol,
-        label, dim, iterate = false, bigrams = bigrams)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try
-      // |fractions| rows: materialize eagerly so both persisted feature
-      // frames can be released in the finally (r13 ADVICE)
-      fractionsPct.map { p =>
-        val w = logisticWeights(pool.filter(fracOfId < p), iters, lr)
+    val docs = logisticDocs(df, idCol, textCol, label, dim, bigrams,
+      id => when(h("lc-eval", id) % 5 === 0, lit(100L))
+        .otherwise(h("lc-frac", id) % 100))
+    val evalFeats = explodeBuckets(docs.filter(col("__k") === 100L))
+    val spark = df.sparkSession
+    try {
+      val fits = logisticFit(docs, dim, iters, lr,
+        fractionsPct.map(_.toLong).toArray, Array.fill(fractionsPct.size)(-1L),
+        traced = false)
+      local(fractionsPct.zip(fits).map { case (p, fit) =>
+        val w = weightsOf(spark, fit)
           .select(col("bucket"), round(col("weight"), roundTo).as("weight"))
         confusionOf(zOf(evalFeats, w))
           .select(lit(p).cast("long").as("train_pct"), col("n_docs"),
             col("tp"), col("fp"), col("tn"), col("fn"), col("accuracy_bps"))
-      }.reduce(_.unionByName(_)).orderBy("train_pct")
-        .localCheckpoint(eager = true)
-    finally { pool.unpersist(); evalFeats.unpersist() }
+      }.reduce(_.unionByName(_)).orderBy("train_pct"))
+    } finally docs.unpersist()
   }
 
   /** Training-loss trajectory of the quality classifier — the diagnostics
@@ -1208,67 +1202,31 @@ object Curation {
     * norm = model capacity, more data won't help.
     *
     * The weight chain is BIT-compatible with [[logisticTrain]] (same
-    * feature frame, z/residual/gradient arithmetic, DECIMAL(28,18)
+    * per-doc frame, z/residual/gradient arithmetic, DECIMAL(28,18)
     * quantization points and update sequence), so the oracle replays it
     * with the exact same unrolled CTE chain x176 gates and reads the
     * losses off each step — the x176 replay pattern pointed at the loss
     * instead of the weights. The loss terms go through libm (ln/exp) on
     * both engines, per-row-quantized before the sum like the BM25 idf.
     *
-    * Scale: identical to [[logisticTrain]] (two passes per iteration
-    * over the persisted feature frame, broadcast weights) plus one
-    * (dim+1)-row norm aggregate per step — the diagnostics add nothing
-    * corpus-sized. */
+    * Scale: identical to [[logisticTrain]] — the loss at the incoming
+    * weights is one more exact slot of the same kernel pass, so a step is
+    * still one job; the norm is a driver-side sum over ≤ dim+1 terms. */
   def logisticTrainCurve(df: DataFrame, idCol: String, textCol: String,
       label: Column, dim: Int = 32, iters: Int = 8, lr: Double = 0.5,
       roundTo: Int = 6, bigrams: Boolean = false): DataFrame = {
     require(dim >= 2 && dim <= 4096, s"dim=$dim out of [2,4096]")
     require(iters >= 1 && iters <= 16, "iters out of [1,16]")
-    val feats = logisticFeatures(df, idCol, textCol, label, dim,
-      bigrams = bigrams)
-    import graft.functions.expr.DotProductDec18.q18OrNull
-    import graft.functions.expr.GatherSumDec18.gatherSumDec18
-    import graft.functions.expr.SumDec18.sumDec18
-    val (docs, n, wpos, wneg, seen) = logisticDocs(feats)
-    val maxB = if (seen.isEmpty) 0 else seen.max.toInt
-    val w = new Array[Double](maxB + 1)
-    val rows = Seq.newBuilder[(Long, Double, Double)]
+    val fit = fitOne(df, idCol, textCol, label, dim, iters, lr, bigrams,
+      traced = true)
     // Spark's round(double, s) sequence — shortest-decimal HALF_UP
     def rnd(x: Double): Double = java.math.BigDecimal.valueOf(x)
       .setScale(roundTo, java.math.RoundingMode.HALF_UP).doubleValue
-    try {
-      // n == 0 (no featured docs): the curve is empty — skip the
-      // per-iteration jobs rather than dividing the loss by zero
-      for (t <- 1 to iters if n > 0) {
-        // class-weighted logistic loss at the incoming weights: per-row
-        // cw·ln(1+exp(∓z)) quantized pre-sum, one final division by n —
-        // z via the native gather-sum, the same exact decimal total the
-        // former join-aggregate produced
-        val z = gatherSumDec18(col("__bs"), lit(w))
-        // sumDec18 over an empty/all-null frame is null (SQL sum
-        // semantics) — degrade to loss 0 instead of an NPE (r13 ADVICE)
-        val lsRow = docs.select(
-            (when(col("y") === 1, lit(wpos) * log(lit(1.0) + exp(-z)))
-              .otherwise(lit(wneg) * log(lit(1.0) + exp(z)))).as("__l"))
-          .agg(sumDec18(col("__l")).as("__ls")).head()
-        val ls = if (lsRow.isNullAt(0)) 0.0 else lsRow.getDouble(0)
-        val gs = gradStep(docs, w, wpos, wneg, maxB + 1)
-        // grad-norm: sqrt of the exact dec18 sum of grad² — the same
-        // quantize/exact-sum/convert chain, replayed driver-side over
-        // the (dim+1)-bounded gradient
-        var g2 = java.math.BigDecimal.ZERO
-        val grads = gs.map { case (b, g) => b -> (g / n) }
-        grads.values.foreach { g =>
-          val q = q18OrNull(g * g)
-          if (q ne null) g2 = g2.add(q)
-        }
-        rows += ((t.toLong, rnd(ls / n), rnd(math.sqrt(g2.doubleValue))))
-        grads.foreach { case (b, g) => w(b.toInt) -= lr * g }
-      }
-    } finally { docs.unpersist(); feats.unpersist() }
     val spark = df.sparkSession
     import spark.implicits._
-    rows.result().toDF("iter", "loss", "grad_norm").orderBy("iter")
+    fit.curve.zipWithIndex
+      .map { case ((ls, g), t) => (t + 1L, rnd(ls), rnd(g)) }
+      .toDF("iter", "loss", "grad_norm")
   }
 
   /** χ² token–label feature selection — which vocabulary items carry the
@@ -1325,5 +1283,110 @@ object Curation {
       .limit(topK)
       .select(col("token"), (col("__a") + col("__b")).as("df_docs"),
         col("__a").as("pos_docs"), round(col("__chi2"), 6).as("chi2"))
+  }
+}
+
+/** Which per-doc rows each model of [[Curation.logisticFit]] trains on:
+  * model j takes the rows whose slice key is in [0, hi(j)) and is not
+  * skip(j). */
+private[functions] final class LogisticSlices(hi: Array[Long],
+    skip: Array[Long]) extends Serializable {
+  val m: Int = hi.length
+  def has(j: Int, k: Long): Boolean = k >= 0 && k < hi(j) && k != skip(j)
+}
+
+/** The kernel's setup-pass sums per model: featured docs, positive and
+  * negative labels (a null or other label counts in `n` only), and the
+  * buckets seen. Rows are (y, __bs, __k). */
+private[functions] final class DocCounts(m: Int, slots: Int)
+    extends Serializable {
+  val n = new Array[Long](m)
+  val pos = new Array[Long](m)
+  val neg = new Array[Long](m)
+  val seen: Array[Array[Boolean]] = Array.fill(m)(new Array[Boolean](slots))
+
+  def add(s: LogisticSlices, r: InternalRow): Unit = {
+    val k = r.getLong(2)
+    val bs = r.getArray(1)
+    var j = 0
+    while (j < m) {
+      if (s.has(j, k)) {
+        n(j) += 1
+        if (!r.isNullAt(0)) r.getInt(0) match {
+          case 1 => pos(j) += 1
+          case 0 => neg(j) += 1
+          case _ =>
+        }
+        val sj = seen(j)
+        var i = 0
+        while (i < bs.numElements()) { sj(bs.getLong(i).toInt) = true; i += 1 }
+      }
+      j += 1
+    }
+  }
+
+  def merge(o: DocCounts): DocCounts = {
+    var j = 0
+    while (j < m) {
+      n(j) += o.n(j); pos(j) += o.pos(j); neg(j) += o.neg(j)
+      var b = 0
+      while (b < slots) { seen(j)(b) |= o.seen(j)(b); b += 1 }
+      j += 1
+    }
+    this
+  }
+}
+
+/** One GD step's exact per-model sums: the (dim+1) gradient slots, plus
+  * the loss slot last when traced. */
+private[functions] final class GdSums(m: Int, slots: Int, traced: Boolean)
+    extends Serializable {
+  val sums: Array[Dec18Sums] =
+    Array.fill(m)(new Dec18Sums(if (traced) slots + 1 else slots))
+
+  def merge(o: GdSums): GdSums = {
+    var j = 0
+    while (j < m) { sums(j).mergeFrom(o.sums(j)); j += 1 }
+    this
+  }
+}
+
+/** One GD step's per-row work, shipped in the task closure with the
+  * driver's weights: for each model the row belongs to, z is the
+  * exact-decimal gather over the model's weights, the residual
+  * (σ(z) − y)·cw is quantized once and added into each of the row's
+  * buckets (a null label contributes no gradient), and a traced step
+  * adds the class-weighted loss cw·ln(1 + e^(∓z)) into the loss slot (a
+  * null label takes the negative branch, as SQL's when/otherwise does).
+  *
+  * exp and ln are `StrictMath`'s: the SQL step this replaces evaluated
+  * them inside an aggregate's argument, which Spark interprets (codegen
+  * would call `java.lang.Math`, whose x86 intrinsics differ by an ulp);
+  * LogisticKernelSpec pins the weights, losses and norms bit for bit. */
+private[functions] final class LogisticStep(slices: LogisticSlices,
+    w: Array[UnsafeArrayData], wpos: Array[Double], wneg: Array[Double],
+    traced: Boolean) extends Serializable {
+  @transient private lazy val scratch = new Array[Long](2)
+
+  def add(acc: GdSums, r: InternalRow): Unit = {
+    val k = r.getLong(2)
+    val bs = r.getArray(1)
+    val labeled = !r.isNullAt(0)
+    val y = if (labeled) r.getInt(0) else 0
+    var j = 0
+    while (j < slices.m) {
+      if (slices.has(j, k)) {
+        val z = GatherSumDec18.gather(bs, w(j))
+        val s = acc.sums(j)
+        if (traced)
+          s.addTerm(s.size - 1,
+            if (labeled && y == 1) wpos(j) * StrictMath.log(1.0 + StrictMath.exp(-z))
+            else wneg(j) * StrictMath.log(1.0 + StrictMath.exp(z)), scratch)
+        if (labeled)
+          s.addEach(bs, (1.0 / (1.0 + StrictMath.exp(-z)) - y.toDouble) *
+            (if (y == 1) wpos(j) else wneg(j)), scratch)
+      }
+      j += 1
+    }
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, Nu
   * `sum(CAST(x·w AS DECIMAL(28,18)))` idiom when the value table is
   * driver-bounded (the logistic family's per-document logit z over the
   * (dim+1)-entry weight vector — see
-  * [[graft.functions.Curation]] logisticWeights). Each gathered value
+  * [[graft.functions.Curation]] logisticFit). Each gathered value
   * is quantized exactly like Spark's double→DECIMAL(28,18) cast
   * ([[VecMomentsDec18.quantize18]]; non-finite / precision-28 overflow
   * terms are skipped like the cast's null under `sum`), accumulated

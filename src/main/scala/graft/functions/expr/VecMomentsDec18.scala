@@ -18,14 +18,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * BigDecimal(hi·10¹⁸ + lo, scale 18)` — exact at any magnitude and any
   * row count. `seen` preserves SQL `sum` null semantics (a slot no
   * in-precision finite term ever reached is null, not 0). */
-final class Dec18Sums(var size: Int) {
+final class Dec18Sums(var size: Int) extends Serializable {
   var hi: Array[Long] = new Array[Long](size)
   var lo: Array[Long] = new Array[Long](size)
   var seen: Array[Boolean] = new Array[Boolean](size)
   var spill: Array[java.math.BigDecimal] = _
   /** Transient parse scratch for callers that use this class AS an agg
     * buffer ([[SumDec18]]); never serialized. */
-  var scratch: Array[Long] = _
+  @transient var scratch: Array[Long] = _
 
   def grow(n: Int): Unit = if (n > size) {
     hi = java.util.Arrays.copyOf(hi, n)
@@ -76,6 +76,22 @@ final class Dec18Sums(var size: Int) {
   def addTerm(t: Int, x: Double, scratch: Array[Long]): Unit =
     if (VecMomentsDec18.quantize18(x, scratch))
       addParsed(t, scratch(0), scratch(1))
+
+  /** Quantize `x` ONCE (a term the cast nulls is skipped whole) and add
+    * it into every in-range slot that `idx` names; a repeated index adds
+    * it again, a null or out-of-range one adds nothing. */
+  def addEach(idx: ArrayData, x: Double, scratch: Array[Long]): Unit =
+    if (VecMomentsDec18.quantize18(x, scratch)) {
+      val n = idx.numElements()
+      var i = 0
+      while (i < n) {
+        if (!idx.isNullAt(i)) {
+          val b = idx.getLong(i)
+          if (b >= 0L && b < size) addParsed(b.toInt, scratch(0), scratch(1))
+        }
+        i += 1
+      }
+    }
 
   def mergeFrom(o: Dec18Sums): Unit = {
     grow(o.size)

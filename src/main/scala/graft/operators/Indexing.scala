@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * Shape: range-repartition on the key (ordered ranges → ascending partition
   * ids) → per-partition local row_number (parallel) → per-partition counts
-  * (tiny) → cumulative offsets (a |partitions|-row window) → broadcast the
-  * offsets back. The result equals the global row_number for a UNIQUE key
-  * regardless of where the sampled range boundaries land. At 100 TB this is
+  * (tiny) → exclusive offsets over those ≤ |partitions| counts (no
+  * window) → broadcast the offsets back. The result equals the global
+  * row_number for a UNIQUE key regardless of where the sampled range
+  * boundaries land. At 100 TB this is
   * one range shuffle + one broadcast, with every heavy step parallel. */
 object Indexing {
 
@@ -70,11 +71,9 @@ object Indexing {
     // indices). One materialization pins one boundary set.
     val local = parts.withColumn("__rn", row_number().over(wLocal)).persist()
     // |partitions| rows: cumulative count of all earlier partitions
-    val wOff = Window.orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy("__pid").agg(count(lit(1)).as("__n"))
-      .withColumn("__off", coalesce(sum(col("__n")).over(wOff), lit(0L)))
-      .select(col("__pid"), col("__off"))
+    val offsets = exclusiveOffsets(
+      local.groupBy("__pid").agg(count(lit(1)).as("__t_n")), Nil, Seq("n"))
+      .withColumnRenamed("__o_n", "__off")
     local.join(broadcast(offsets), "__pid")
       .withColumn("global_idx", col("__off") + col("__rn"))
       .drop("__pid", "__rn", "__off")
@@ -91,12 +90,12 @@ object Indexing {
     * Shape: range-repartition on (groupCols, orderExprs) → per-partition
     * local exclusive prefix sums (parallel; the window is partitioned by
     * the physical partition id) → per-(partition, group) totals (tiny) →
-    * per-group cumulative offsets over partition ids (a ≤|partitions|-row
-    * window per group) → broadcast the offsets back. Like globalIndexBy,
-    * the materialization pin (persist) is REQUIRED: repartitionByRange
-    * samples its boundaries, and two independent executions can pick
-    * different ranges, desyncing `__pid` between the offsets and the
-    * local sums. Exact for integral value columns (Long sums).
+    * per-group exclusive offsets over partition ids (≤ |partitions|
+    * entries per group, no window) → broadcast the offsets back. Like
+    * globalIndexBy, the materialization pin (persist) is REQUIRED:
+    * repartitionByRange samples its boundaries, and two independent
+    * executions can pick different ranges, desyncing `__pid` between the
+    * offsets and the local sums. Exact for integral value columns (Long sums).
     *
     * Appends one `<v>_excl` Long column per entry of `valueCols` — the
     * sum of that column over all STRICTLY EARLIER rows in
@@ -118,17 +117,38 @@ object Indexing {
     val local = parts.select(col("*") +: valueCols.map(v =>
       coalesce(sum(col(v)).over(wLocal), lit(0L)).as(s"__l_$v")): _*)
       .persist()
-    val wOff = Window.partitionBy(groupCols.map(col): _*).orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local
+    val offsets = exclusiveOffsets(local
       .groupBy(("__pid" +: groupCols).map(col): _*)
       .agg(sum(col(valueCols.head)).as(s"__t_${valueCols.head}"),
-        valueCols.tail.map(v => sum(col(v)).as(s"__t_$v")): _*)
-      .select(("__pid" +: groupCols).map(col) ++ valueCols.map(v =>
-        coalesce(sum(col(s"__t_$v")).over(wOff), lit(0L)).as(s"__o_$v")): _*)
+        valueCols.tail.map(v => sum(col(v)).as(s"__t_$v")): _*),
+      groupCols, valueCols)
     local.join(broadcast(offsets), "__pid" +: groupCols)
       .select(df.columns.map(col) ++ valueCols.map(v =>
         (col(s"__o_$v") + col(s"__l_$v")).as(s"${v}_excl")): _*)
+  }
+
+  /** Per (partition, group) EXCLUSIVE offsets `__o_<v>`: the sum of the
+    * totals `__t_<v>` of every earlier partition id of the same group.
+    * The input has one row per (partition, group) — ≤ |partitions| per
+    * group — so each group collects its totals into one array and every
+    * entry sums the entries with smaller ids (≤ |partitions|² additions
+    * per group). Unlike a window ordered by `__pid` this needs no
+    * partition-less WindowExec, which funnels through one task and logs
+    * `No Partition Defined` on every run, and unlike a self-join on
+    * `earlier.__pid < __pid` it plans no nested-loop join. */
+  private def exclusiveOffsets(totals: DataFrame, groupCols: Seq[String],
+      valueCols: Seq[String]): DataFrame = {
+    val parts = col("__parts")
+    val entry = struct(col("__pid") +: valueCols.map(v => col(s"__t_$v")): _*)
+    totals.groupBy(groupCols.map(col): _*)
+      .agg(collect_list(entry).as("__parts"))
+      .select(groupCols.map(col) :+ explode(transform(parts, x =>
+        struct(x("__pid").as("__pid") +: valueCols.map(v =>
+          aggregate(filter(parts, e => e("__pid") < x("__pid")), lit(0L),
+            (acc, e) => acc + coalesce(e(s"__t_$v"), lit(0L)))
+            .as(s"__o_$v")): _*))).as("__e"): _*)
+      .select(groupCols.map(col) ++ (col("__e.__pid") +:
+        valueCols.map(v => col(s"__e.__o_$v"))): _*)
   }
 
   /** The range shuffle width: the caller's, else the session's. */

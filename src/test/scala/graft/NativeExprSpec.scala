@@ -449,24 +449,33 @@ class NativeExprSpec extends SparkSpec {
     assert(got(12L) == 0.0 && got(13L) == w(0) && got(14L) == 0.0)
   }
 
-  test("scatter_sum_dec18 equals the explode + groupBy decimal-sum " +
-    "formulation slot for slot; merge path and edge inputs pinned") {
-    import graft.functions.expr.ScatterSumDec18.scatterSumDec18
+  test("the GD kernel's bucket scatter equals the explode + groupBy " +
+    "decimal-sum formulation slot for slot; merge path and edge inputs pinned") {
+    import graft.functions.expr.Dec18Sums
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     import org.apache.spark.sql.functions._
-    val docs = Seq(
+    val rows = Seq(
       (10L, Seq(0L, 3L), 0.125),
       (11L, Seq(1L, 1L, 3L), -3.5),      // duplicate index lands twice
       (12L, Seq(2L), Double.NaN),        // NaN value: row skipped whole
       (13L, Seq(99L, -1L, 0L), 0.0000005), // out-of-range skipped
       (14L, Seq.empty[Long], 7.0),       // empty index array
       (15L, Seq(3L), 55321.95))
-      .toDF("id", "bs", "v")
-    def run(df: org.apache.spark.sql.DataFrame): Seq[Any] =
-      df.select(scatterSumDec18(col("bs"), col("v"), 5).as("g"))
-        .head().getSeq[Any](0)
-    val got = run(docs)
-    // SQL replay: explode + per-bucket decimal sum (the former gradStep
-    // shape) — slots with no surviving term are null
+    val docs = rows.toDF("id", "bs", "v")
+    // the kernel's per-row accumulate (Dec18Sums.addEach) over a slice of
+    // the rows, then its partial merge (Dec18Sums.mergeFrom)
+    def scatter(part: Seq[(Long, Seq[Long], Double)]): Dec18Sums = {
+      val acc = new Dec18Sums(5)
+      val scratch = new Array[Long](2)
+      part.foreach { case (_, bs, v) =>
+        acc.addEach(UnsafeArrayData.fromPrimitiveArray(bs.toArray), v, scratch) }
+      acc
+    }
+    def slots(acc: Dec18Sums): Seq[Any] =
+      (0 until 5).map(t => if (acc.seen(t)) acc.total(t).doubleValue else null)
+    val got = slots(scatter(rows))
+    // SQL replay: explode + per-bucket decimal sum — slots with no
+    // surviving term are null
     val want = {
       val prev = spark.conf.get("spark.sql.ansi.enabled")
       spark.conf.set("spark.sql.ansi.enabled", "false")
@@ -485,8 +494,13 @@ class NativeExprSpec extends SparkSpec {
     // slot 2 only saw the NaN row → null (SQL sum-over-nulled-casts);
     // slot 4 never named → null; slot 1 carries the duplicate twice
     assert(got(2) == null && got(4) == null && got(1) == -7.0)
-    // partial-merge path: 3 partitions force serialize/merge
-    assert(run(docs.repartition(3)) == want, "partial-merge diverged")
+    // partial-merge path: three partials merged in either order
+    val parts = rows.grouped(2).map(scatter).toSeq
+    val merged = parts.reduce { (a, b) => a.mergeFrom(b); a }
+    assert(slots(merged) == want, "partial-merge diverged")
+    val back = rows.grouped(2).map(scatter).toSeq.reverse
+      .reduce { (a, b) => a.mergeFrom(b); a }
+    assert(slots(back) == want, "reverse merge diverged")
   }
 
   test("dot_product_dec18 skips non-finite and precision-overflow terms " +

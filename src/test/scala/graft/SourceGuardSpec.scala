@@ -96,6 +96,15 @@ class SourceGuardSpec extends AnyFunSuite {
         show(Seq(set)))
   }
 
+  test("the logistic GD kernel is the one tree-aggregated job") {
+    // Curation.kernelPass: every setup and GD pass of the logistic family
+    assertOnlyIn("""\.treeAggregate\(""", "graft/functions/Curation.scala", 1)
+    // the per-step SQL gradient aggregate it replaced stays gone
+    val scatter = hits("ScatterSumDec18|scatter_sum_dec18")
+    assert(scatter.isEmpty, "the per-step scatter aggregate is back:\n" +
+      show(scatter))
+  }
+
   test("replay and index widths take no literal default") {
     val literals = hits("""def replayShuffle\([^)]*=""") ++
       hits("""partitions: (Int|Option\[Int\]) = (\d|Some)""")
