@@ -24,7 +24,7 @@ final class Dec18Sums(var size: Int) extends Serializable {
   var seen: Array[Boolean] = new Array[Boolean](size)
   var spill: Array[java.math.BigDecimal] = _
   /** Transient parse scratch for callers that use this class AS an agg
-    * buffer ([[SumDec18]]); never serialized. */
+    * buffer (the test-scope `SumDec18` aggregate); never serialized. */
   @transient var scratch: Array[Long] = _
 
   def grow(n: Int): Unit = if (n > size) {

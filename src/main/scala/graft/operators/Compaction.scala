@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.LocalWrites
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction (100 TB toolkit; beyond reference).
@@ -28,9 +29,8 @@ object Compaction {
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
 
     val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    spark.read.parquet(path)
-      .repartition(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
+    LocalWrites.write(spark.read.parquet(path).repartition(nOut))
+      .mode("overwrite").parquet(tmp.toString)
     val backup = new org.apache.hadoop.fs.Path(path + "__precompact")
     if (fs.exists(backup)) fs.delete(backup, true)
     fs.rename(hPath, backup)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.LocalWrites
 import graft.sources.XlsxMini
 import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Path, StandardCopyOption}
@@ -79,18 +80,18 @@ object Exporter {
 
   /** K2/K3/K4 bulk writers (reference: src/cli.py:46-48; src/exporter.py:61-66,106-109). */
   def writeParquet(df: DataFrame, path: Path): Unit =
-    df.write.mode("overwrite").parquet(path.toString)
+    LocalWrites.write(df).mode("overwrite").parquet(path.toString)
 
   def writeJsonl(df: DataFrame, path: Path): Unit =
-    df.write.mode("overwrite").json(path.toString)
+    LocalWrites.write(df).mode("overwrite").json(path.toString)
 
   def writeCsv(df: DataFrame, path: Path): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path.toString)
+    LocalWrites.write(df).mode("overwrite").option("header", "true").csv(path.toString)
 
   /** ORC writer — same contract as [[writeParquet]]; ORC ships in Spark's
     * own jars, so the columnar sink matrix covers both lakehouse formats. */
   def writeOrc(df: DataFrame, path: Path): Unit =
-    df.write.mode("overwrite").orc(path.toString)
+    LocalWrites.write(df).mode("overwrite").orc(path.toString)
 
   /** K6 export manifest with quality metrics, all from ONE Profiler agg
     * (reference: src/exporter.py:69-118, metrics :14-33). Returns the

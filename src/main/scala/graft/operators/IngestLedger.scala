@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.LocalWrites
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
 
@@ -103,9 +104,9 @@ private[graft] object IngestLedger {
 
   def recordAppliedBatch(spark: org.apache.spark.sql.SparkSession,
       ckpt: String, batchId: Long): Unit = {
-    spark.range(1).select(lit(batchId).as("batch_id"),
-        lit(false).as("is_wm"))
-      .coalesce(1).write.mode("append").parquet(path(ckpt))
+    LocalWrites.write(spark.range(1).select(lit(batchId).as("batch_id"),
+        lit(false).as("is_wm")).coalesce(1))
+      .mode("append").parquet(path(ckpt))
     val p = new org.apache.hadoop.fs.Path(path(ckpt))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parts = fs.listStatus(p).map(_.getPath)
@@ -122,8 +123,9 @@ private[graft] object IngestLedger {
       parts: Array[org.apache.hadoop.fs.Path]): Unit = {
     val a = read(spark, ckpt)
     val rows = (a.through, true) +: a.extra.toSeq.sorted.map((_, false))
-    spark.createDataFrame(rows).toDF("batch_id", "is_wm")
-      .coalesce(1).write.mode("append").parquet(path(ckpt))
+    LocalWrites.write(spark.createDataFrame(rows).toDF("batch_id", "is_wm")
+        .coalesce(1))
+      .mode("append").parquet(path(ckpt))
     parts.foreach(f => fs.delete(f, false))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.LocalWrites
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,7 +27,7 @@ object PartitionLayout {
     val sorted =
       if (sortCols.isEmpty) clustered
       else clustered.sortWithinPartitions((partCols ++ sortCols).map(col): _*)
-    sorted.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
+    LocalWrites.write(sorted).mode("overwrite").partitionBy(partCols: _*).parquet(path)
   }
 
   /** Read back with the partition schema inferred from the directories. */

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.LocalWrites
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -67,7 +68,7 @@ object ZOrder {
       path: String): Unit = {
     // __z must survive until AFTER the exchange/sort; dropping it earlier
     // would let the optimizer collapse the layout
-    zOrdered(df, cols, numFiles).write.mode("overwrite").parquet(path)
+    LocalWrites.write(zOrdered(df, cols, numFiles)).mode("overwrite").parquet(path)
   }
 
   /** Equal-MASS variant for skewed columns: equal-width quantization
@@ -97,7 +98,8 @@ object ZOrder {
 
   def writeZOrderedQuantile(df: DataFrame, cols: Seq[String], numFiles: Int,
       path: String, buckets: Int = 256): Unit =
-    zOrderedQuantile(df, cols, numFiles, buckets).write.mode("overwrite").parquet(path)
+    LocalWrites.write(zOrderedQuantile(df, cols, numFiles, buckets))
+      .mode("overwrite").parquet(path)
 
   /** Balanced binary search over sorted boundaries as a nested-when tree:
     * bucket index in [lo, hi]; `bounds(i)` is the upper boundary of bucket

@@ -257,32 +257,33 @@ class EventStreamSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Timestamp)]
     val streamDf = mem.toDF().toDF("user_id", "ts")
     val name = "tsess_reopen"
-    val ckpt = java.nio.file.Files.createTempDirectory("tsess_reopen").toString
-    val q = EventStream.sessionizeTimeout(streamDf, gapSeconds = 1800)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").option("checkpointLocation", ckpt).start()
-    def t(hm: String) = Timestamp.valueOf(s"2024-01-01 $hm:00")
-    try {
-      mem.addData((1L, ts(0)))
-      q.processAllAvailable()
-      mem.addData((2L, t("12:00"))) // watermark → 12:00, past 10:00+gap
-      q.processAllAvailable()
-      mem.addData((2L, t("12:01"))) // user 1's timeout fires: session 1 out
-      q.processAllAvailable()
-      mem.addData((1L, t("12:05"))) // reopens from the tombstone
-      q.processAllAvailable()
-      mem.addData((2L, t("14:00"))) // watermark → 14:00, past 12:05+gap
-      q.processAllAvailable()
-      mem.addData((2L, t("14:01"))) // user 1's second timeout fires
-      q.processAllAvailable()
-      val closed = spark.table(name).filter($"user_id" === 1L)
-        .orderBy("session_id").collect()
-      assert(closed.length == 2)
-      assert(closed(0).getAs[Long]("session_id") == 1L &&
-        closed(0).getAs[Timestamp]("session_start") == ts(0))
-      assert(closed(1).getAs[Long]("session_id") == 2L &&
-        closed(1).getAs[Timestamp]("session_start") == t("12:05"))
-    } finally q.stop()
+    graft.streaming.Replay.withTempDir(spark, "tsess_reopen") { ckpt =>
+      val q = EventStream.sessionizeTimeout(streamDf, gapSeconds = 1800)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").option("checkpointLocation", ckpt).start()
+      def t(hm: String) = Timestamp.valueOf(s"2024-01-01 $hm:00")
+      try {
+        mem.addData((1L, ts(0)))
+        q.processAllAvailable()
+        mem.addData((2L, t("12:00"))) // watermark → 12:00, past 10:00+gap
+        q.processAllAvailable()
+        mem.addData((2L, t("12:01"))) // user 1's timeout fires: session 1 out
+        q.processAllAvailable()
+        mem.addData((1L, t("12:05"))) // reopens from the tombstone
+        q.processAllAvailable()
+        mem.addData((2L, t("14:00"))) // watermark → 14:00, past 12:05+gap
+        q.processAllAvailable()
+        mem.addData((2L, t("14:01"))) // user 1's second timeout fires
+        q.processAllAvailable()
+        val closed = spark.table(name).filter($"user_id" === 1L)
+          .orderBy("session_id").collect()
+        assert(closed.length == 2)
+        assert(closed(0).getAs[Long]("session_id") == 1L &&
+          closed(0).getAs[Timestamp]("session_start") == ts(0))
+        assert(closed(1).getAs[Long]("session_id") == 2L &&
+          closed(1).getAs[Timestamp]("session_start") == t("12:05"))
+      } finally q.stop()
+    }
   }
 
   test("dedupeStream drops in-watermark duplicates, keeps first occurrence") {

@@ -103,14 +103,16 @@ class IndexingMediaSpec extends SparkSpec {
   }
 
   test("ORC writer round-trips schema and values") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc")
-    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "s", "v")
-    Exporter.writeOrc(df, dir.resolve("t.orc"))
-    val back = spark.read.orc(dir.resolve("t.orc").toString).orderBy("k")
-    // ORC reads everything back nullable — compare names + types only
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      df.schema.map(f => (f.name, f.dataType)))
-    assert(back.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq ==
-      Seq((1L, "a", 1.5), (2L, "b", 2.5)))
+    graft.streaming.Replay.withTempDir(spark, "graft_orc") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "s", "v")
+      Exporter.writeOrc(df, dir.resolve("t.orc"))
+      val back = spark.read.orc(dir.resolve("t.orc").toString).orderBy("k")
+      // ORC reads everything back nullable — compare names + types only
+      assert(back.schema.map(f => (f.name, f.dataType)) ==
+        df.schema.map(f => (f.name, f.dataType)))
+      assert(back.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq ==
+        Seq((1L, "a", 1.5), (2L, "b", 2.5)))
+    }
   }
 }

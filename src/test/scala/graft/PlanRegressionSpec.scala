@@ -698,14 +698,16 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("partitioned write prunes partitions on read") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("prune")
-    Seq(("a", 1), ("b", 2), ("a", 3)).toDF("part_key", "v")
-      .write.partitionBy("part_key").parquet(dir.resolve("t").toString)
-    val read = spark.read.parquet(dir.resolve("t").toString)
-      .filter($"part_key" === "a")
-    val p = read.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p.contains("PartitionFilters: [isnotnull(part_key"), p.take(400))
-    assert(read.count() == 2)
+    graft.streaming.Replay.withTempDir(spark, "prune") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      Seq(("a", 1), ("b", 2), ("a", 3)).toDF("part_key", "v")
+        .write.partitionBy("part_key").parquet(dir.resolve("t").toString)
+      val read = spark.read.parquet(dir.resolve("t").toString)
+        .filter($"part_key" === "a")
+      val p = read.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      assert(p.contains("PartitionFilters: [isnotnull(part_key"), p.take(400))
+      assert(read.count() == 2)
+    }
   }
 
   test("x270 min-span windows are partitioned (never a global sort) " +

@@ -105,6 +105,25 @@ class SourceGuardSpec extends AnyFunSuite {
       show(scatter))
   }
 
+  test("graft's local path writes go through LocalWrites") {
+    // the one writer option that names the fork-free file system
+    assertOnlyIn("""fs\.file\.impl""", "graft/io/LocalWrites.scala", 1)
+    val writers = Map("graft/operators/Exporter.scala" -> 4,
+      "graft/operators/IngestLedger.scala" -> 2,
+      "graft/operators/Compaction.scala" -> 1,
+      "graft/operators/PartitionLayout.scala" -> 1,
+      "graft/operators/ZOrder.scala" -> 2, "graft/Verify.scala" -> 1)
+    val direct = hits("""(?<!LocalWrites)\.write\b(?!\()""")
+      .filter(h => writers.contains(h._1))
+    assert(direct.isEmpty, "a `.write` without LocalWrites:\n" + show(direct))
+    val helped = hits("""LocalWrites\.write\(""").groupBy(_._1)
+      .map { case (f, hs) => f -> hs.length }
+    writers.foreach { case (f, n) =>
+      assert(helped.getOrElse(f, 0) == n, s"$f: ${helped.getOrElse(f, 0)} " +
+        s"LocalWrites.write calls, expected $n")
+    }
+  }
+
   test("replay and index widths take no literal default") {
     val literals = hits("""def replayShuffle\([^)]*=""") ++
       hits("""partitions: (Int|Option\[Int\]) = (\d|Some)""")

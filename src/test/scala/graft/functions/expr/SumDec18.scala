@@ -19,11 +19,14 @@ import org.apache.spark.sql.types.{DataType, DataTypes, DoubleType}
   * value, any aggregation order — but the per-row update is a primitive
   * quantize/accumulate instead of an interpreted decimal-buffer
   * aggregate (DECIMAL(38,18) agg buffers are immutable in UnsafeRow, so
-  * the SQL shape plans as non-codegen aggregation — the x79 cost class,
-  * here hit once per GD iteration per feature row by the logistic
-  * family). Strictly wider than the SQL sum where DECIMAL(38,18) would
-  * overflow to null. Null for a group with no surviving term — SQL
-  * `sum` semantics. */
+  * the SQL shape plans as non-codegen aggregation — the x79 cost class).
+  * Strictly wider than the SQL sum where DECIMAL(38,18) would overflow
+  * to null. Null for a group with no surviving term — SQL `sum`
+  * semantics.
+  *
+  * Test scope: no engine code calls it since the logistic family's loss
+  * moved into its tree-aggregated kernel; LogisticKernelSpec's reference
+  * formulation and NativeExprSpec's pin use it. */
 case class SumDec18(child: Expression, mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Dec18Sums] with UnaryLike[Expression] {
