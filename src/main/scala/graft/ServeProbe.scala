@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.LocalWrites
 import org.apache.spark.sql.functions._
 
 /** Dev-only serve-path profiler (optimization guide §1): decompose the
@@ -52,15 +53,16 @@ object ServeProbe {
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         step("build: sparse stream") {
           Replay.withTempDir(spark, "graft_probe_feed_s") { feedS =>
-            d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
-              .repartition(4).write.mode("overwrite").parquet(feedS)
+            LocalWrites.write(d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
+              .repartition(4)).mode("overwrite").parquet(feedS)
             Retrieval.fileStreamIndexIngest(spark, feedS, "doc_id", "text",
               "graft_probe_x286_postings", boundsBlocks = 16) } }
         step("build: dense stream") {
           Replay.withTempDir(spark, "graft_probe_feed_d") { feedD =>
-            emb.select(col("vec_id"), col("label"), col("embedding"))
+            LocalWrites.write(emb
+              .select(col("vec_id"), col("label"), col("embedding"))
               .filter(col("vec_id") >= 5 && col("vec_id") % 5 =!= 4)
-              .repartition(4).write.mode("overwrite").parquet(feedD)
+              .repartition(4)).mode("overwrite").parquet(feedD)
             Similarity.fileStreamIvfIngest(spark, feedD, "vec_id", "label",
               "embedding", "graft_probe_x286_ivf") }
           Similarity.buildIvfCodes(spark, "graft_probe_x286_ivf", "vec_id",

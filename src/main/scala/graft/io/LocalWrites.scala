@@ -48,6 +48,16 @@ private[graft] object LocalWrites {
   def write(df: DataFrame): DataFrameWriter[Row] =
     df.write.options(options(df.sparkSession))
 
+  /** Run `f` on the file system of a driver-side write to `p`: the
+    * fork-free one (a new instance, closed after `f`) when `p` resolves to
+    * a stock `file:` class, else `p`'s own (cached, left open). */
+  def withFileSystem[T](spark: SparkSession, p: Path)(f: FileSystem => T): T = {
+    val conf = spark.sessionState.newHadoopConf()
+    options(spark).foreach { case (k, v) => conf.set(k, v) }
+    val fs = p.getFileSystem(conf)
+    try f(fs) finally if (fs.isInstanceOf[LocalWriteFileSystem]) fs.close()
+  }
+
   /** The writer options [[write]] adds: none when a caller's own
     * `fs.file.impl` is in force. */
   def options(spark: SparkSession): Map[String, String] =

@@ -1,6 +1,8 @@
 package graft.operators
 
+import graft.functions.expr.MinHashSig
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Large-scale training-data deduplication (beyond-reference north star):
@@ -63,127 +65,122 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
 
-  /** MinHash signatures: `numPerms` min-hash columns `h0..h{n-1}` per id.
-    * One explode + one groupBy — the heavy lifting is a single shuffle with
-    * partial aggregation. Permutations use the Kirsch-Mitzenmacher scheme
-    * (h_i = h1 + i·h2 mod 2³²) so each shingle is md5'd ONCE, not numPerms
-    * times — at 100 TB the hash work dominates this operator. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      numPerms: Int, shingleK: Int = 3): DataFrame =
-    minhashFromSets(shingleSets(df, idCol, textCol, shingleK), idCol, numPerms)
-
-  private[operators] def minhashFromSets(sets: DataFrame, idCol: String,
-      numPerms: Int): DataFrame = {
-    val exploded = sets.select(col(idCol), explode(col("shs")).as("sh"))
-      .withColumn("__md5", md5(col("sh")))
-      .withColumn("__ha", conv(substring(col("__md5"), 1, 8), 16, 10).cast("long"))
-      .withColumn("__hb", conv(substring(col("__md5"), 9, 8), 16, 10).cast("long"))
-    val aggs = (0 until numPerms).map(i =>
-      min((col("__ha") + lit(i.toLong) * col("__hb")) % lit(4294967296L)).as(s"h$i"))
-    exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+  /** LSH band rows of a frame with a text column: the text is tokenized
+    * ONCE into its distinct shingle set `shs` (the words array bound to a
+    * column first, as in [[shingleSets]]), signed by
+    * [[graft.functions.expr.MinHashSig]] into `sig` (`bands·rowsPerBand`
+    * slots), and posexploded into one row per band: `band` and `bkey`, the
+    * band's slice of `sig`. The text column is dropped and every other
+    * column carried. Empty and null sets yield no rows because the
+    * posexplode's input is null for them; a `Filter` on the set size would
+    * be pushed below the Project and evaluate the tokenization twice. */
+  private def bandRows(docs: DataFrame, textCol: String, bands: Int,
+      rowsPerBand: Int, shingleK: Int): DataFrame = {
+    val carried = docs.columns.filter(_ != textCol).map(col).toSeq
+    val keys = array((0 until bands).map(b =>
+      slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)): _*)
+    docs.withColumn("__ws", words(col(textCol)))
+      .select(carried :+ shingles(col("__ws"), shingleK).as("shs"): _*)
+      .withColumn("sig", MinHashSig.minhashSig(col("shs"), bands * rowsPerBand))
+      .select(carried ++ Seq(col("shs"), col("sig"),
+        posexplode(when(size(col("shs")) > 0, keys)).as(Seq("band", "bkey"))): _*)
   }
 
-  /** MinHash+LSH near-duplicate pairs: exact-dup pre-pass → signatures over
-    * distinct content → banded bucket join → true-Jaccard verify → group
-    * re-expansion. Returns (id_a, id_b, jaccard) with id_a < id_b,
-    * jaccard >= threshold.
+  /** Joined band rows `a`, `b` of one (band, bkey) bucket that also share
+    * the key of an earlier band: such a pair was already met there. Keeping
+    * only the first colliding band verifies each pair once, with no
+    * `distinct` over the candidates. */
+  private def metInEarlierBand(bands: Int, rowsPerBand: Int): Column =
+    (0 until bands - 1).map { j =>
+      col("b.band") > j && (0 until rowsPerBand).map { r =>
+        val i = j * rowsPerBand + r
+        col("a.sig").getItem(i) === col("b.sig").getItem(i)
+      }.reduce(_ && _)
+    }.foldLeft(lit(false))(_ || _)
+
+  private def sameBucket: Column =
+    col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
+
+  /** MinHash+LSH near-duplicate pairs: (id_a, id_b, jaccard) with
+    * id_a < id_b and jaccard ≥ threshold, over the documents' distinct
+    * word `shingleK`-shingle sets. Documents with a null id or an empty
+    * set contribute no pair. bands×rowsPerBand = the signature width.
     *
-    * bands×rowsPerBand = numPerms. Candidate generation is a self-join on
-    * (band, band_key) — skew-safe because band keys are hashes; at 100 TB
-    * the bucket join shuffles O(n·bands) rows, never O(n²).
+    * One chain with two exchanges, no cache:
+    *  1. ONE groupBy on md5(text) collapses exact copies into a content
+    *     group, `members` = its ids (null ids dropped), text = the min-id
+    *     copy's, representative `id` = the smallest member. Identical texts
+    *     have identical signatures, so a group of m exact copies would put
+    *     m rows in every one of its band buckets, O(m²) candidates per
+    *     bucket, the classic LSH blow-up on real corpora. LSH runs on the
+    *     groups instead, and the members are re-expanded at the end: the
+    *     output equals running LSH over every row, because two rows share
+    *     a bucket iff their groups do.
+    *  2. The representative text is tokenized once, signed by the native
+    *     [[graft.functions.expr.MinHashSig]] kernel and exploded into band
+    *     rows (id, members, shs, sig, band, bkey).
+    *  3. The band rows go through ONE explicit `repartition(band, bkey)` at
+    *     the session width, which both sides of the self-join read (the
+    *     exchange is reused). Without it a broadcast join's build and probe
+    *     sides would each tokenize the corpus.
+    *  4. Self-join on (band, bkey) with `a.id <= b.id`, keeping a pair only
+    *     in the first band where it collides, so each pair is verified once.
+    *     The `a.id = b.id` row is the group with itself (Jaccard exactly
+    *     1.0): it yields the pairs among exact copies. The true Jaccard is
+    *     checked on the joined row, then `members × members` is exploded.
     *
-    * EXACT-DUP PRE-PASS: identical texts have identical signatures, so a
-    * group of m exact copies would put m rows in every one of its band
-    * buckets — O(m²) candidate pairs per bucket, the classic LSH blow-up on
-    * real corpora (where exact duplication is heavy). Instead LSH runs over
-    * ONE representative per distinct content (min id) and membership is
-    * re-expanded afterwards. The output is provably identical to running
-    * LSH over every row, because signatures depend only on content: two
-    * rows share a bucket iff their representatives do. */
-  /** @param maxBucket optional per-bucket cap (default: unlimited). The
-    *   exact-dup pre-pass removes byte-identical floods, but m NEAR-identical
-    *   documents (templated spam, boilerplate) still share every band key and
-    *   cost O(m²) candidates. Buckets larger than the cap are degenerate
-    *   ("everything matches everything") and are dropped wholesale — a
-    *   recall/cost trade the caller opts into; pair discovery for capped
-    *   content should fall back to coarser keys (e.g. exactDedup on a
-    *   normalized prefix). */
+    * Candidate generation is an equi-join on (band, bkey), skew-safe
+    * because band keys are hashes; at 100 TB the bucket join shuffles
+    * O(n·bands) rows, never O(n²).
+    *
+    * @param maxBucket optional per-bucket cap (default: unlimited). The
+    *   group collapse removes byte-identical floods, but m NEAR-identical
+    *   documents (templated spam, boilerplate) still share every band key
+    *   and cost O(m²) candidates. Buckets of more than `maxBucket` groups
+    *   are degenerate ("everything matches everything") and yield no
+    *   cross-group candidates, a recall/cost trade the caller opts into;
+    *   each group still meets itself, so exact copies still pair. A capped
+    *   earlier band breaks the first-band rule, so this path dedupes the
+    *   candidates with one `dropDuplicates` instead. Pair discovery for
+    *   capped content should fall back to coarser keys (e.g. exactDedup on
+    *   a normalized prefix). */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 4, rowsPerBand: Int = 2, threshold: Double = 0.8,
       shingleK: Int = 3, maxBucket: Int = Int.MaxValue): DataFrame = {
-    val numPerms = bands * rowsPerBand
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val hashed = df.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .withColumn("__th", md5(col("__text")))
-    // one groupBy on the content hash yields the representative per group …
-    val repAgg = hashed.groupBy("__th")
-      .agg(min(col("id")).as("rep"), min_by(col("__text"), col("id")).as("__text"))
-      .persist(lvl)
-    // … the membership map (id → rep) …
-    val members = hashed.select(col("id"), col("__th"))
-      .join(repAgg.select(col("__th"), col("rep")), "__th")
-      .select(col("id"), col("rep"))
-      .persist(lvl)
-    // … and the distinct-content frame LSH actually runs on.
-    val reps = repAgg.select(col("rep").as("id"), col("__text"))
-
-    // shingle sets feed the signature AND both sides of the verify join —
-    // persist once instead of re-tokenizing the corpus three times
-    val sets = shingleSets(reps, "id", "__text", shingleK).persist(lvl)
-    val sig = minhashFromSets(sets, "id", numPerms)
-
-    // band rows: (id, band, key = "_"-joined minhashes of the band)
-    val bandStructs = (0 until bands).map { b =>
-      val key = concat_ws("_",
-        (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}").cast("string")): _*)
-      struct(lit(b).as("band"), key.as("bkey"))
-    }
-    val bandRows = sig.select(col("id"),
-        explode(array(bandStructs: _*)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-
-    val capped =
-      if (maxBucket == Int.MaxValue) bandRows
+    val groups = df.groupBy(md5(col(textCol)))
+      .agg(collect_list(col(idCol)).as("members"),
+        min_by(col(textCol), col(idCol)).as("__text"))
+      .select(array_min(col("members")).as("id"), col("members"), col("__text"))
+    val rows = bandRows(groups, "__text", bands, rowsPerBand, shingleK)
+      .repartition(col("band"), col("bkey"))
+    def pairs(side: DataFrame, cond: Column) =
+      side.alias("a").join(side.alias("b"),
+          sameBucket && col("a.id") <= col("b.id") && cond)
+        .select(col("a.id").as("ra"), col("b.id").as("rb"),
+          col("a.members").as("ma"), col("b.members").as("mb"),
+          col("a.shs").as("sa"), col("b.shs").as("sb"))
+    val candidates =
+      if (maxBucket == Int.MaxValue)
+        pairs(rows, !metInEarlierBand(bands, rowsPerBand))
       else {
-        val wB = org.apache.spark.sql.expressions.Window.partitionBy("band", "bkey")
-        bandRows.withColumn("__bs", count(lit(1)).over(wB))
-          .filter(col("__bs") <= maxBucket).drop("__bs")
+        // a bucket over the cap joins only each group with itself: its
+        // rows carry their own id as one more join key
+        val sized = rows.withColumn("__self", when(
+          count(lit(1)).over(Window.partitionBy("band", "bkey")) > maxBucket,
+          col("id")))
+        pairs(sized, col("a.__self") <=> col("b.__self"))
+          .dropDuplicates("ra", "rb")
       }
-    val a = capped.alias("a")
-    val b = capped.alias("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("ra"), col("b.id").as("rb"))
-      .distinct()
-
-    val sa = sets.select(col("id").as("ra"), col("shs").as("shs_a"))
-    val sb = sets.select(col("id").as("rb"), col("shs").as("shs_b"))
-    val repPairs = candidates.join(sa, "ra").join(sb, "rb")
-      .select(col("ra"), col("rb"),
-        (size(array_intersect(col("shs_a"), col("shs_b"))).cast("double") /
-          (size(col("shs_a")) + size(col("shs_b")) -
-            size(array_intersect(col("shs_a"), col("shs_b"))))).as("jaccard"))
+    candidates.select(col("ra"), col("rb"), col("ma"), col("mb"),
+        jaccardOf(col("sa"), col("sb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-
-    // Re-expansion. Intra-group: every pair of exact copies has Jaccard 1.0
-    // exactly — but only groups whose representative produced a signature
-    // (non-empty shingle set) ever appeared in LSH, matching the all-rows
-    // semantics where short docs emit no pairs.
-    val sigReps = sets.filter(size(col("shs")) > 0).select(col("id").as("rep"))
-    val inSig = members.join(sigReps, "rep")
-    val intra = inSig.select(col("rep"), col("id").as("id_a"))
-      .join(inSig.select(col("rep"), col("id").as("id_b")), "rep")
-      .filter(col("id_a") < col("id_b") && lit(1.0) >= lit(threshold))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    // Cross-group: each verified representative pair expands to all member
-    // combinations (hash joins on rep — no new shuffling shape).
-    val cross = repPairs
-      .join(members.select(col("rep").as("ra"), col("id").as("xa")), "ra")
-      .join(members.select(col("rep").as("rb"), col("id").as("xb")), "rb")
+      .select(col("ra"), col("rb"), explode(col("ma")).as("xa"), col("mb"),
+        col("jaccard"))
+      .select(col("ra"), col("rb"), col("xa"), explode(col("mb")).as("xb"),
+        col("jaccard"))
+      .filter(col("ra") < col("rb") || col("xa") < col("xb"))
       .select(least(col("xa"), col("xb")).as("id_a"),
         greatest(col("xa"), col("xb")).as("id_b"), col("jaccard"))
-    intra.unionByName(cross)
   }
 
   /** Planted-pair recall audit for MinHash-LSH banding — the honesty gate
@@ -289,43 +286,22 @@ object Dedup {
   /** Cross-corpus MinHash+LSH near-duplicate pairs: the FUZZY
     * decontamination / contamination-audit primitive — find (left, right)
     * pairs whose texts are near-identical across two different corpora
-    * (train vs eval set, fresh crawl vs existing corpus). Same banded
-    * machinery as [[minhashNearDups]], but the candidate join is
+    * (train vs eval set, fresh crawl vs existing corpus). Same band rows
+    * and first-band rule as [[minhashNearDups]], but the candidate join is
     * left-bands ⋈ right-bands: still an equi-join on (band, key), still
-    * O(n·bands) shuffle — never a cross join between the corpora.
+    * O(n·bands) shuffle — never a cross join between the corpora. Each
+    * side is tokenized once; the Jaccard is verified on the joined row.
     * Returns (id_a ∈ left, id_b ∈ right, jaccard ≥ threshold). */
   def minhashCrossDups(left: DataFrame, right: DataFrame, idCol: String,
       textCol: String, bands: Int = 4, rowsPerBand: Int = 2,
       threshold: Double = 0.8, shingleK: Int = 3): DataFrame = {
-    val numPerms = bands * rowsPerBand
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def prep(df: DataFrame) = shingleSets(
-      df.select(col(idCol).as("id"), col(textCol).as("__text")),
-      "id", "__text", shingleK).persist(lvl)
-    def bandRows(sets: DataFrame) = {
-      val sig = minhashFromSets(sets, "id", numPerms)
-      val bandStructs = (0 until bands).map { b =>
-        val key = concat_ws("_", (0 until rowsPerBand)
-          .map(r => col(s"h${b * rowsPerBand + r}").cast("string")): _*)
-        struct(lit(b).as("band"), key.as("bkey"))
-      }
-      sig.select(col("id"), explode(array(bandStructs: _*)).as("bk"))
-        .select(col("id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    }
-    val setsL = prep(left)
-    val setsR = prep(right)
-    val candidates = bandRows(setsL).alias("a")
-      .join(bandRows(setsR).alias("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val inter = size(array_intersect(col("shs_a"), col("shs_b")))
-    candidates
-      .join(setsL.select(col("id").as("id_a"), col("shs").as("shs_a")), "id_a")
-      .join(setsR.select(col("id").as("id_b"), col("shs").as("shs_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (inter.cast("double") /
-          (size(col("shs_a")) + size(col("shs_b")) - inter)).as("jaccard"))
+    def side(df: DataFrame) = bandRows(
+      df.select(col(idCol).as("id"), col(textCol).as("__text")), "__text",
+      bands, rowsPerBand, shingleK)
+    side(left).alias("a").join(side(right).alias("b"),
+        sameBucket && !metInEarlierBand(bands, rowsPerBand))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        jaccardOf(col("a.shs"), col("b.shs")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 

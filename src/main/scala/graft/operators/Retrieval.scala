@@ -482,12 +482,13 @@ object Retrieval {
   private def setGen(spark: org.apache.spark.sql.SparkSession,
       table: String, gen: Long): Unit = {
     val p = genPath(spark, table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // incl. a pre-r15 parquet dir
-    val out = fs.create(p, true)
-    try out.write(gen.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.io.LocalWrites.withFileSystem(spark, p) { fs =>
+      if (fs.exists(p)) fs.delete(p, true) // incl. a pre-r15 parquet dir
+      val out = fs.create(p, true)
+      try out.write(gen.toString.getBytes(
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
   }
 
   /** Drop-and-overwrite a small companion table. Idempotent across

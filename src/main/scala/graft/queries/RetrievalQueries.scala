@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.io.LocalWrites
 import graft.operators.{Retrieval, Similarity}
 import graft.streaming.Replay
 import org.apache.spark.sql.functions._
@@ -965,8 +966,8 @@ object RetrievalQueries {
     (s, dir) =>
       val d = t(s, dir, "documents")
       Replay.withTempDir(s, "graft_x256_feed") { feed =>
-        d.filter(col("doc_id") >= 5).repartition(4)
-          .write.mode("overwrite").parquet(feed)
+        LocalWrites.write(d.filter(col("doc_id") >= 5).repartition(4))
+          .mode("overwrite").parquet(feed)
         Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
           "graft_x256_postings")
       }
@@ -1086,7 +1087,7 @@ object RetrievalQueries {
     (s, dir) =>
       val d = t(s, dir, "documents")
       Replay.withTempDir(s, "graft_x262_feed") { feed =>
-        d.repartition(4).write.mode("overwrite").parquet(feed)
+        LocalWrites.write(d.repartition(4)).mode("overwrite").parquet(feed)
         Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
           "graft_x262_postings", withPositional = true)
       }
@@ -1138,8 +1139,8 @@ object RetrievalQueries {
     (s, dir) =>
       val d = t(s, dir, "documents")
       Replay.withTempDir(s, "graft_x264_feed") { feed =>
-        d.filter(col("doc_id") >= 5).repartition(4)
-          .write.mode("overwrite").parquet(feed)
+        LocalWrites.write(d.filter(col("doc_id") >= 5).repartition(4))
+          .mode("overwrite").parquet(feed)
         Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
           "graft_x264_postings", champTopN = 1000000)
       }
@@ -1339,8 +1340,8 @@ object RetrievalQueries {
     // whole family; doc ids ≡ 7 (mod 10) are all in this slice
     PhaseTimer.time("x271_streamed_family_chain", "build") {
       Replay.withTempDir(s, "graft_x271_feed") { feed =>
-        d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
-          .repartition(4).write.mode("overwrite").parquet(feed)
+        LocalWrites.write(d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
+          .repartition(4)).mode("overwrite").parquet(feed)
         // champions ride at a REALISTIC capped topN: the chain certifies
         // the maintenance paths compose (seed → per-batch refresh →
         // tombstone filter → compaction rewrite); the equality gate is
@@ -1494,8 +1495,8 @@ object RetrievalQueries {
     (s, dir) =>
       val d = t(s, dir, "documents")
       Replay.withTempDir(s, "graft_x277_feed") { feed =>
-        d.filter(col("doc_id") >= 5).repartition(4)
-          .write.mode("overwrite").parquet(feed)
+        LocalWrites.write(d.filter(col("doc_id") >= 5).repartition(4))
+          .mode("overwrite").parquet(feed)
         Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text",
           "graft_x277_postings", boundsBlocks = 16)
       }
@@ -1616,8 +1617,8 @@ object RetrievalQueries {
     val tbl = "graft_x281_postings"
     PhaseTimer.time("x281_bounds_lifecycle_chain", "build") {
       Replay.withTempDir(s, "graft_x281_feed") { feed =>
-        d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
-          .repartition(4).write.mode("overwrite").parquet(feed)
+        LocalWrites.write(d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
+          .repartition(4)).mode("overwrite").parquet(feed)
         Retrieval.fileStreamIndexIngest(s, feed, "doc_id", "text", tbl,
           boundsBlocks = 16)
       }
@@ -1715,15 +1716,16 @@ object RetrievalQueries {
     val emb = t(s, dir, "embeddings")
     PhaseTimer.time("x282_hybrid_indexed_fusion", "build") {
       Replay.withTempDir(s, "graft_x282_feed_s") { feedS =>
-        d.filter(col("doc_id") >= 5).repartition(4)
-          .write.mode("overwrite").parquet(feedS)
+        LocalWrites.write(d.filter(col("doc_id") >= 5).repartition(4))
+          .mode("overwrite").parquet(feedS)
         Retrieval.fileStreamIndexIngest(s, feedS, "doc_id", "text",
           "graft_x282_postings", boundsBlocks = 16)
       }
       Replay.withTempDir(s, "graft_x282_feed_d") { feedD =>
-        emb.select(col("vec_id"), col("label"), col("embedding"))
-          .filter(col("vec_id") >= 5).repartition(4)
-          .write.mode("overwrite").parquet(feedD)
+        LocalWrites.write(emb
+          .select(col("vec_id"), col("label"), col("embedding"))
+          .filter(col("vec_id") >= 5).repartition(4))
+          .mode("overwrite").parquet(feedD)
         Similarity.fileStreamIvfIngest(s, feedD, "vec_id", "label",
           "embedding", "graft_x282_ivf")
       }
@@ -1854,15 +1856,16 @@ object RetrievalQueries {
     // centroid state); ids ≡ 7 (mod 10) are all inside this slice
     PhaseTimer.time("x286_hybrid_lifecycle_chain", "build") {
       Replay.withTempDir(s, "graft_x286_feed_s") { feedS =>
-        d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
-          .repartition(4).write.mode("overwrite").parquet(feedS)
+        LocalWrites.write(d.filter(col("doc_id") >= 5 && col("doc_id") % 5 =!= 4)
+          .repartition(4)).mode("overwrite").parquet(feedS)
         Retrieval.fileStreamIndexIngest(s, feedS, "doc_id", "text",
           "graft_x286_postings", boundsBlocks = 16)
       }
       Replay.withTempDir(s, "graft_x286_feed_d") { feedD =>
-        emb.select(col("vec_id"), col("label"), col("embedding"))
+        LocalWrites.write(emb
+          .select(col("vec_id"), col("label"), col("embedding"))
           .filter(col("vec_id") >= 5 && col("vec_id") % 5 =!= 4)
-          .repartition(4).write.mode("overwrite").parquet(feedD)
+          .repartition(4)).mode("overwrite").parquet(feedD)
         Similarity.fileStreamIvfIngest(s, feedD, "vec_id", "label",
           "embedding", "graft_x286_ivf")
       }

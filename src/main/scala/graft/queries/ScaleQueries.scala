@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.io.LocalWrites
 import graft.functions.{Curation, Multimodal, TextAnalysis}
 import graft.operators.{Combiner, Dedup, Graph, Similarity}
 import graft.streaming.{EventStream, Replay}
@@ -1384,8 +1385,9 @@ object ScaleQueries {
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)) { (s, dir) =>
     val out = java.nio.file.Files.createTempDirectory("graft_compact")
       .resolve("events").toString
-    Tables.events(s, dir).select("event_id", "ts", "user_id", "event_type", "value")
-      .repartition(64).write.mode("overwrite").parquet(out)
+    LocalWrites.write(Tables.events(s, dir)
+        .select("event_id", "ts", "user_id", "event_type", "value").repartition(64))
+      .mode("overwrite").parquet(out)
     val (before, after) = graft.operators.Compaction.compact(s, out,
       targetFileBytes = 8L * 1024 * 1024)
     assert(after < before, s"compaction did not reduce files: $before -> $after")
@@ -2492,8 +2494,9 @@ object ScaleQueries {
     (s, dir) =>
       val emb = t(s, dir, "embeddings")
       Replay.withTempDir(s, "graft_x268_feed") { feed =>
-        emb.select(col("vec_id"), col("label"), col("embedding"))
-          .repartition(4).write.mode("overwrite").parquet(feed)
+        LocalWrites.write(emb
+          .select(col("vec_id"), col("label"), col("embedding"))
+          .repartition(4)).mode("overwrite").parquet(feed)
         Similarity.fileStreamIvfIngest(s, feed, "vec_id", "label",
           "embedding", "graft_x268_ivf")
       }
@@ -2516,7 +2519,7 @@ object ScaleQueries {
         .cast("int").as("label"),
       col("embedding"))
     Replay.withTempDir(s, s"graft_${table}_feed") { feed =>
-      skewed.repartition(4).write.mode("overwrite").parquet(feed)
+      LocalWrites.write(skewed.repartition(4)).mode("overwrite").parquet(feed)
       Similarity.fileStreamIvfIngest(s, feed, "vec_id", "label",
         "embedding", table)
     }

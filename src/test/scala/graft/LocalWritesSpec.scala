@@ -90,6 +90,29 @@ class LocalWritesSpec extends SparkSpec {
     assert(!FileSystem.getLocal(hadoopConf).isInstanceOf[LocalWriteFileSystem])
   }
 
+  test("a driver-side file write gets the fork-free file system, then the cache as before") {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    def local() = FileSystem.get(new java.net.URI("file:///"), hadoopConf)
+    val fsBefore = local()
+    withDir("local_fs") { dir =>
+      def put(fs: FileSystem, name: String): Unit = {
+        val out = fs.create(new HPath(dir.resolve(name).toString), true)
+        try out.write(7) finally out.close()
+      }
+      val used = LocalWrites.withFileSystem(spark, new HPath(dir.toString)) { fs =>
+        put(fs, "gen"); fs }
+      assert(used.isInstanceOf[LocalWriteFileSystem])
+      put(fsBefore, "stock")
+      assert(modes(dir)("gen") == modes(dir)("stock") &&
+        modes(dir)(".gen.crc") == modes(dir)(".stock.crc"), modes(dir))
+      SessionConf.withConf(spark, "fs.file.impl" -> classOf[RawLocalFileSystem].getName) {
+        LocalWrites.withFileSystem(spark, new HPath(dir.toString)) { fs =>
+          assert(!fs.isInstanceOf[LocalWriteFileSystem]) }
+      }
+    }
+    assert(local() eq fsBefore)
+  }
+
   test("a caller's own fs.file.impl is kept") {
     assert(LocalWrites.options(spark)("fs.file.impl") == classOf[LocalWriteFileSystem].getName)
     SessionConf.withConf(spark, "fs.file.impl" -> classOf[RawLocalFileSystem].getName) {

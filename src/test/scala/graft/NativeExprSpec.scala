@@ -534,4 +534,43 @@ class NativeExprSpec extends SparkSpec {
     assert(dotArr(Array(1.0, Double.NaN, 2.0, 1.0e11),
       Array(2.0, 3.0, Double.NaN, 1.0e11)) == 2.0)
   }
+
+  test("minhash_sig equals the explode + groupBy formulation slot for slot, " +
+    "with null elements and empty arrays") {
+    import graft.functions.expr.MinHashSig.minhashSig
+    val n = 6
+    val sets = Seq(
+      (1L, Some(Seq(Some("a b c"), Some("b c d"), Some("c d e")))),
+      (2L, Some(Seq(Some("x"), None, Some("y")))),  // a null element
+      (3L, Some(Seq(None, None))),                   // only null elements
+      (4L, Some(Seq.empty[Option[String]])),         // empty set
+      (5L, None),                                    // null set
+      (6L, Some(Seq(Some("\u00fc \u00df \u6f22"), Some(""), Some("a b c")))))
+      .toDF("id", "shs")
+    // a missing reference row (empty set) reads as all-null slots
+    val want = MinHashLshSpec.signatures(sets, n).collect()
+      .map(r => r.getLong(0) -> (1 to n).map(i =>
+        if (r.isNullAt(i)) None else Some(r.getLong(i)))).toMap
+    def kernel(): Map[Long, Option[Seq[Option[Long]]]] =
+      sets.select(col("id"), minhashSig(col("shs"), n)).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None
+          else Some(r.getSeq[Any](1).map(v => Option(v).map(_.asInstanceOf[Long])))))
+        .toMap
+    def check(got: Map[Long, Option[Seq[Option[Long]]]]): Unit = {
+      assert(got(5L).isEmpty, "a null set has a null signature")
+      for (id <- Seq(1L, 2L, 3L, 4L, 6L))
+        assert(got(id).contains(want.getOrElse(id, Seq.fill(n)(None))),
+          s"id $id: ${got(id)} vs ${want.get(id)}")
+    }
+    assert(want(2L).forall(_.isDefined) && want(3L).forall(_.isEmpty) &&
+      !want.contains(4L))
+    check(kernel())
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try check(kernel())
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
 }

@@ -85,10 +85,33 @@ class PlanRegressionSpec extends SparkSpec {
       "the maxRows guard was pruned out of the plan:\n" + p.take(600))
   }
 
-  test("x2 LSH persists shingle sets once (InMemoryTableScan in verify)") {
-    val p = plan("x2_minhash_lsh_neardups")
-    assert(p.contains("InMemoryRelation") || p.contains("InMemoryTableScan"),
-      "shingle sets no longer persisted:\n" + p.take(600))
+  test("x2 LSH caches nothing and tokenizes once, under the reused band exchange") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val df = Registry.byName("x2_minhash_lsh_neardups").run(spark, sf)
+    df.collect()
+    // the executed (final adaptive) plan; a reused exchange counts once,
+    // where it ran
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _: ReusedExchangeExec => Nil
+      case other => other.children.flatMap(nodes)
+    })
+    def tokenizes(p: SparkPlan): Boolean =
+      p.expressions.exists(_.exists(_.isInstanceOf[RegExpReplace]))
+    val all = nodes(df.queryExecution.executedPlan)
+    val shown = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]) &&
+      !shown.contains("InMemoryRelation"), "x2 reads a cache:\n" + shown.take(800))
+    assert(all.count(tokenizes) == 1,
+      s"${all.count(tokenizes)} nodes tokenize:\n" + shown.take(1500))
+    val reused = all.collect { case r: ReusedExchangeExec => r }
+    assert(reused.exists(r => nodes(r.child).exists(tokenizes)),
+      "the tokenizing exchange is not reused:\n" + shown.take(1500))
   }
 
   test("x23 partitioned layout prunes whole directories on the event_type filter") {

@@ -112,7 +112,9 @@ class SourceGuardSpec extends AnyFunSuite {
       "graft/operators/IngestLedger.scala" -> 2,
       "graft/operators/Compaction.scala" -> 1,
       "graft/operators/PartitionLayout.scala" -> 1,
-      "graft/operators/ZOrder.scala" -> 2, "graft/Verify.scala" -> 1)
+      "graft/operators/ZOrder.scala" -> 2, "graft/Verify.scala" -> 1,
+      "graft/queries/RetrievalQueries.scala" -> 10,
+      "graft/queries/ScaleQueries.scala" -> 3, "graft/ServeProbe.scala" -> 2)
     val direct = hits("""(?<!LocalWrites)\.write\b(?!\()""")
       .filter(h => writers.contains(h._1))
     assert(direct.isEmpty, "a `.write` without LocalWrites:\n" + show(direct))
@@ -122,6 +124,9 @@ class SourceGuardSpec extends AnyFunSuite {
       assert(helped.getOrElse(f, 0) == n, s"$f: ${helped.getOrElse(f, 0)} " +
         s"LocalWrites.write calls, expected $n")
     }
+    // the index generation file, the one driver-side file write
+    assertOnlyIn("""LocalWrites\.withFileSystem\(""",
+      "graft/operators/Retrieval.scala", 1)
   }
 
   test("replay and index widths take no literal default") {
